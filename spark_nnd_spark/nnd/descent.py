@@ -27,13 +27,16 @@ SURVEY.md §4 "minimal feature shipping"):
 
 - candidate messages between groups carry only (id, id, similarity) —
   features NEVER ride on the O(N·K̄²) candidate stream;
-- feature vectors are shipped exactly once per (group, member) pair,
-  O(N·K̄·dim) per iteration, via an equi-join against the persisted
-  active-points table — the DataFrame equivalent of the reference's
-  self-message + sampled-reverse feature routing (NND.scala:142-197);
-- the O(|A(v)|²) pairwise scoring runs in a numpy kernel inside
-  ``applyInPandas`` (Arrow-batched, BLAS matmul) — pairs are never
-  materialized as shuffle rows;
+- the local join runs per BLOCK, not per group: groups are hashed into
+  ``n_blocks`` blocks (about one per shuffle partition, more only when a
+  block would exceed ``_BLOCK_BYTES`` of vectors), and a feature vector
+  ships once per (block, member) pair — one copy however many of the
+  block's groups A(v) hold it, instead of one copy per group;
+- each block is ONE Arrow call (``cogroup(...).applyInArrow``): the id
+  rows and the block's distinct member vectors arrive as two Arrow
+  tables, and the O(|A(v)|²) pairwise scoring runs group by group in
+  numpy (BLAS matmul) inside it — pairs are never materialized as
+  shuffle rows;
 - per-iteration ``localCheckpoint`` truncates the growing logical plan
   (SURVEY.md A13 — the one thing the DataFrame port needs that the RDD
   version didn't).
@@ -44,12 +47,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_nnd_spark.schemas import normalize_points, validate_points
+from spark_nnd_spark.schemas import InvalidPointsError, normalize_points, validate_points
 
 _CAND_SCHEMA = T.StructType(
     [
@@ -57,6 +61,10 @@ _CAND_SCHEMA = T.StructType(
         T.StructField("nb_id", T.LongType()),
         T.StructField("sim", T.DoubleType()),
     ]
+)
+
+_CAND_SCHEMA_ARROW = pa.schema(
+    [("id", pa.int64()), ("nb_id", pa.int64()), ("sim", pa.float64())]
 )
 
 # Working-graph neighbor entries carry an `is_new` flag (incremental search).
@@ -80,131 +88,265 @@ _OUT_NEIGHBOR = T.ArrayType(
 )
 
 
-def _init_kernel(seed: int, k: int):
-    """Per-bucket random init (NND.scala:95-102): each member samples K
-    neighbors with replacement, scores them, drops self-edges. Seeded by
-    (seed, bucket) → deterministic, unlike the reference's global Random.
-    """
+# Expected float32 vector bytes one block of the local join may receive.
+# Blocks are sized from an upper bound on the join's (v, member) rows —
+# every active node's K forward, ≤ K sampled-reverse (on average) and one
+# self row — so one Python worker holds at most about this much feature
+# data (plus its float64 copy) at a time, however large the corpus.
+_BLOCK_BYTES = 64 << 20
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        bucket = int(key[0])
-        ids = pdf["id"].to_numpy(np.int64)
-        feats = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-        rng = np.random.default_rng([seed & 0x7FFFFFFF, bucket & 0x7FFFFFFFFFFF])
-        # K draws with replacement per member (reference semantics).
-        draws = rng.integers(0, m, size=(m, k))
-        src = np.repeat(np.arange(m), k)
-        dst = draws.ravel()
-        mask = src != dst
-        src, dst = src[mask], dst[mask]
-        if len(src) == 0:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        diff = feats[src] - feats[dst]
-        sims = 1.0 / (1.0 + np.sqrt((diff * diff).sum(axis=1)))
-        return pd.DataFrame({"id": ids[src], "nb_id": ids[dst], "sim": sims})
+
+def _n_parts(spark: SparkSession) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _join_blocks(spark: SparkSession, n_active: int, dim: int, k: int) -> int:
+    """Number of local-join blocks: one per shuffle partition (the work
+    spreads over every task slot, and each vector ships once per block,
+    so fewer blocks ship less), more when a block's share of the
+    ``n_active·(2K+1)`` member vectors would exceed ``_BLOCK_BYTES``;
+    never more than there are groups."""
+    n_parts = _n_parts(spark)
+    need = math.ceil(n_active * (2 * k + 1) * max(dim, 1) * 4 / _BLOCK_BYTES)
+    return max(1, min(max(n_parts, need), n_active))
+
+
+def _murmur3_long(value: int, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashLong`` — the hash behind ``F.hash``
+    and ``HashPartitioning`` for a single BIGINT key."""
+    mask = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & mask
+
+    def mix(h1: int, k1: int) -> int:
+        k1 = rotl((k1 * 0xCC9E2D51) & mask, 15)
+        h1 ^= (k1 * 0x1B873593) & mask
+        return (rotl(h1, 13) * 5 + 0xE6546B64) & mask
+
+    h = mix(mix(seed, value & mask), (value >> 32) & mask) ^ 8
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & mask
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & mask
+    h ^= h >> 16
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+def _block_of(key: str, n_blocks: int, n_parts: int):
+    """Block label of each row: ``pmod(xxhash64(key), n_blocks)`` mapped
+    to a label that Spark's hash partitioning over ``n_parts`` partitions
+    sends to partition ``block % n_parts``. Plain labels 0..n-1 collide
+    (4 blocks hash onto 3 of 4 partitions, 2 onto 1), which would leave
+    task slots idle while others run two blocks."""
+    labels, pools, c = [], [[] for _ in range(n_parts)], 0
+    for b in range(n_blocks):
+        while not pools[b % n_parts]:  # pools[p]: unused ints hashed to p
+            pools[_murmur3_long(c) % n_parts].append(c)
+            c += 1
+        labels.append(pools[b % n_parts].pop(0))
+    idx = (F.pmod(F.xxhash64(key), F.lit(n_blocks)) + 1).cast("int")
+    return F.element_at(F.array(*[F.lit(x).cast("long") for x in labels]), idx)
+
+
+def _float_matrix(col) -> np.ndarray:
+    """An Arrow ``list<float>`` column as an (n, dim) float32 matrix.
+    Every list must be non-null and of one length: ragged vectors raise
+    ``InvalidPointsError`` — never a reshape of data whose total length
+    happens to divide evenly."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    if len(arr) == 0:
+        return np.empty((0, 0), np.float32)
+    span = pc.min_max(pc.list_value_length(arr))
+    lo, hi = span["min"].as_py(), span["max"].as_py()
+    if arr.null_count or lo != hi:
+        raise InvalidPointsError(
+            "feature vectors must be non-null and of one length; got "
+            f"{arr.null_count} null and lengths {lo}..{hi}"
+        )
+    return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), hi)
+
+
+def _cand_table(parts: list) -> pa.Table:
+    """A block's (id, nb_id, sim) candidate arrays as one Arrow table."""
+    if not parts:
+        return _CAND_SCHEMA_ARROW.empty_table()
+    ids, nbs, sims = (np.concatenate(c) for c in zip(*parts))
+    return pa.table({"id": ids, "nb_id": nbs, "sim": sims})
+
+
+def _init_kernel(seed: int, k: int):
+    """Per-bucket random init (NND.scala:95-102), one call per block of
+    buckets: each member samples K neighbors with replacement, scores
+    them, drops self-edges. Seeded by (seed, bucket) → deterministic,
+    unlike the reference's global Random. A stable sort by bucket keeps
+    each bucket's members in arrival order, so the draws index the same
+    members as a one-call-per-bucket kernel would."""
+
+    def kernel(tbl: pa.Table) -> pa.Table:
+        buckets = tbl.column("bucket").to_numpy()
+        order = np.argsort(buckets, kind="stable")
+        all_ids = tbl.column("id").to_numpy()
+        all_feats = _float_matrix(tbl.column("features"))
+        cuts = np.flatnonzero(np.diff(buckets[order])) + 1
+        parts = []
+        for rows in np.split(order, cuts):
+            m = len(rows)
+            if m < 2:
+                continue
+            bucket = int(buckets[rows[0]])
+            ids = all_ids[rows]
+            feats = all_feats[rows].astype(np.float64)
+            rng = np.random.default_rng([seed & 0x7FFFFFFF, bucket & 0x7FFFFFFFFFFF])
+            # K draws with replacement per member (reference semantics).
+            draws = rng.integers(0, m, size=(m, k))
+            src = np.repeat(np.arange(m), k)
+            dst = draws.ravel()
+            mask = src != dst
+            src, dst = src[mask], dst[mask]
+            if len(src) == 0:
+                continue
+            diff = feats[src] - feats[dst]
+            sims = 1.0 / (1.0 + np.sqrt((diff * diff).sum(axis=1)))
+            parts.append((ids[src], ids[dst], sims))
+        return _cand_table(parts)
 
     return kernel
 
 
-def _local_join_kernel(k: int):
+def _join_group(uniq, new_u, feats, thr, cap: int):
     """The NN-Descent local join (NND.scala:200-217) for one adjacency
-    group A(v): score all pairs (u, p), u != p, where at least one
-    endpoint is new (incremental search), and emit id-only candidate
-    messages to both endpoints — pruned in-kernel so the candidate
-    shuffle stays O(K) per node instead of O(|A(v)|):
+    group A(v) of ``m`` distinct members (``uniq`` ascending): score all
+    pairs (u, p), u != p, where at least one endpoint is new (incremental
+    search), and emit id-only candidate messages to both endpoints —
+    pruned here so the candidate shuffle stays O(K) per node instead of
+    O(|A(v)|):
 
     - **threshold prune**: a candidate scoring strictly below the target
-      node's current K-th neighbor similarity (``kth_sim``, shipped in
-      as one scalar per member) cannot displace anything in the merge's
-      top-K — equal scores are kept, since the ascending-id tie-break
-      can still admit them;
-    - **top-2K truncation** per target node within the group: dedup in
-      the merge collapses a candidate onto an existing B-entry (same
-      (id, nb_id)) rather than adding a row, and at most K of the 2K
-      better-ranked candidates can collapse that way, so ≥ K distinct
+      node's current K-th neighbor similarity (``thr``, one scalar per
+      member) cannot displace anything in the merge's top-K — equal
+      scores are kept, since the ascending-id tie-break can still admit
+      them;
+    - **top-2K truncation** (``cap``) per target node within the group:
+      dedup in the merge collapses a candidate onto an existing B-entry
+      (same (id, nb_id)) rather than adding a row, and at most K of the
+      2K better-ranked candidates can collapse that way, so ≥ K distinct
       better entries always remain — a candidate ranked past 2K can
-      never reach the final top-K. Rank order (sim desc, id asc)
-      matches the merge's, so truncation is exact, not approximate.
-
-    Members may repeat (forward ∪ sampled-reverse ∪ self); dedup here,
-    in-group, keeping `new` if any copy was new — cheaper than an extra
-    pre-shuffle distinct.
+      never reach the final top-K. Rank order (sim desc, id asc) matches
+      the merge's, so truncation is exact, not approximate.
     """
+    m = len(uniq)
+    new_idx = np.flatnonzero(new_u)
+    n_new = len(new_idx)
+    a = feats[new_idx]
+    # pairwise squared L2: ||a||² + ||b||² - 2ab (BLAS matmul)
+    d2 = (
+        (a * a).sum(axis=1)[:, None]
+        + (feats * feats).sum(axis=1)[None, :]
+        - 2.0 * (a @ feats.T)
+    )
+    np.maximum(d2, 0.0, out=d2)
+    sims = 1.0 / (1.0 + np.sqrt(d2))  # (n_new, m)
+    sims[np.arange(n_new), new_idx] = -np.inf  # no self-edges
+
+    out = []
+    # Row side: a new node's candidates are all other members. `uniq` is
+    # ascending, so a stable argsort on -sim realizes the merge's exact
+    # (sim desc, id asc) order.
+    kk = min(cap, m - 1)
+    order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
+    rsims = np.take_along_axis(sims, order, axis=1)
+    rmask = np.isfinite(rsims) & (rsims >= thr[new_idx][:, None])
+    if rmask.any():
+        rows = np.broadcast_to(np.arange(n_new)[:, None], rmask.shape)[rmask]
+        out.append((uniq[new_idx[rows]], uniq[order[rmask]], rsims[rmask]))
+
+    # Column side: old members receive candidates only from new rows
+    # (new members were already served by their own row above).
+    old_idx = np.flatnonzero(~new_u)
+    if len(old_idx):
+        csims = sims[:, old_idx]  # (n_new, n_old); new_idx ascending
+        kk2 = min(cap, n_new)
+        order2 = np.argsort(-csims, axis=0, kind="stable")[:kk2, :]
+        cs = np.take_along_axis(csims, order2, axis=0)
+        cmask = np.isfinite(cs) & (cs >= thr[old_idx][None, :])
+        if cmask.any():
+            cols = np.broadcast_to(np.arange(len(old_idx))[None, :], cmask.shape)[cmask]
+            out.append((uniq[old_idx[cols]], uniq[new_idx[order2[cmask]]], cs[cmask]))
+    return out
+
+
+def _local_join_block(k: int):
+    """One block of the local join: ``rows`` holds the block's raw
+    (v, member, is_new) id rows, ``feats`` each distinct member's vector
+    and ``kth_sim`` once. Members repeat within a group (forward ∪
+    sampled-reverse ∪ self); they are deduped here, keeping `new` if any
+    copy was new, and a member without a vector is dropped, as an inner
+    join to the active points would drop it."""
     cap = 2 * k
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["member"].to_numpy(np.int64)
-        isnew = pdf["is_new"].to_numpy(bool)
-        uniq, first_idx, inv = np.unique(ids, return_index=True, return_inverse=True)
-        m = len(uniq)
-        if m < 2:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        new_u = np.zeros(m, dtype=bool)
-        np.logical_or.at(new_u, inv, isnew)
-        if not new_u.any():
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        feats = np.stack(pdf["member_features"].to_numpy()).astype(np.float64)[first_idx]
-        thr = pdf["kth_sim"].to_numpy(np.float64)[first_idx]
-
-        new_idx = np.flatnonzero(new_u)
-        n_new = len(new_idx)
-        a = feats[new_idx]
-        # pairwise squared L2: ||a||² + ||b||² - 2ab (BLAS matmul)
-        d2 = (
-            (a * a).sum(axis=1)[:, None]
-            + (feats * feats).sum(axis=1)[None, :]
-            - 2.0 * (a @ feats.T)
-        )
-        np.maximum(d2, 0.0, out=d2)
-        sims = 1.0 / (1.0 + np.sqrt(d2))  # (n_new, m)
-        sims[np.arange(n_new), new_idx] = -np.inf  # no self-edges
-
-        out_id, out_nb, out_sim = [], [], []
-
-        # Row side: a new node's candidates are all other members.
-        # `uniq` is ascending, so a stable argsort on -sim realizes the
-        # merge's exact (sim desc, id asc) order.
-        kk = min(cap, m - 1)
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        rsims = np.take_along_axis(sims, order, axis=1)
-        rmask = np.isfinite(rsims) & (rsims >= thr[new_idx][:, None])
-        if rmask.any():
-            rows = np.broadcast_to(np.arange(n_new)[:, None], rmask.shape)[rmask]
-            out_id.append(uniq[new_idx[rows]])
-            out_nb.append(uniq[order[rmask]])
-            out_sim.append(rsims[rmask])
-
-        # Column side: old members receive candidates only from new rows
-        # (new members were already served by their own row above).
-        old_idx = np.flatnonzero(~new_u)
-        if len(old_idx):
-            csims = sims[:, old_idx]  # (n_new, n_old); new_idx ascending
-            kk2 = min(cap, n_new)
-            order2 = np.argsort(-csims, axis=0, kind="stable")[:kk2, :]
-            cs = np.take_along_axis(csims, order2, axis=0)
-            cmask = np.isfinite(cs) & (cs >= thr[old_idx][None, :])
-            if cmask.any():
-                cols = np.broadcast_to(
-                    np.arange(len(old_idx))[None, :], cmask.shape
-                )[cmask]
-                out_id.append(uniq[old_idx[cols]])
-                out_nb.append(uniq[new_idx[order2[cmask]]])
-                out_sim.append(cs[cmask])
-
-        if not out_id:
-            return pd.DataFrame(columns=["id", "nb_id", "sim"])
-        return pd.DataFrame(
-            {
-                "id": np.concatenate(out_id),
-                "nb_id": np.concatenate(out_nb),
-                "sim": np.concatenate(out_sim),
-            }
-        )
+    def kernel(rows: pa.Table, feats: pa.Table) -> pa.Table:
+        fid = feats.column("member").to_numpy()
+        forder = np.argsort(fid, kind="stable")
+        fid = fid[forder]
+        fmat = _float_matrix(feats.column("member_features"))
+        kth = feats.column("kth_sim").to_numpy()
+        v = rows.column("v").to_numpy()
+        mem = rows.column("member").to_numpy()
+        isnew = rows.column("is_new").to_numpy(zero_copy_only=False)
+        pos = np.minimum(np.searchsorted(fid, mem), max(len(fid) - 1, 0))
+        keep = (fid[pos] == mem) if len(fid) else np.zeros(len(mem), bool)
+        v, mem, isnew, pos = v[keep], mem[keep], isnew[keep], pos[keep]
+        # dedup (v, member), OR-ing the is_new flags of the copies
+        order = np.lexsort((mem, v))
+        v, mem, isnew, pos = v[order], mem[order], isnew[order], pos[order]
+        first = np.flatnonzero(np.r_[True, (v[1:] != v[:-1]) | (mem[1:] != mem[:-1])])
+        if len(first) == 0:
+            return _cand_table([])
+        isnew = np.logical_or.reduceat(isnew, first)
+        v, mem, frow = v[first], mem[first], forder[pos[first]]
+        starts = np.flatnonzero(np.r_[True, v[1:] != v[:-1]])
+        parts = []
+        for s, e in zip(starts, np.r_[starts[1:], len(v)]):
+            if e - s < 2 or not isnew[s:e].any():
+                continue
+            g = frow[s:e]
+            parts += _join_group(
+                mem[s:e], isnew[s:e], fmat[g].astype(np.float64), kth[g], cap
+            )
+        return _cand_table(parts)
 
     return kernel
+
+
+def _local_join(adj: DataFrame, feats_iter: DataFrame, k: int, n_blocks: int) -> DataFrame:
+    """A11, the local join, for both descent loops: ``adj`` (v, member,
+    is_new) raw id rows, duplicates allowed; ``feats_iter`` (member,
+    member_features, kth_sim). Groups hash into ``n_blocks`` blocks; the
+    id rows exchange by block, each block's distinct members pick up
+    their vectors, and one Arrow call per block scores every group in
+    it. Returns the id-only candidate stream (id, nb_id, sim).
+
+    The (block, member) pairs exchange by member, so when ``feats_iter``
+    is already hash-partitioned by member (the dense loop caches it so)
+    the join moves no vector: each vector crosses one exchange, into
+    its blocks."""
+    n_parts = _n_parts(adj.sparkSession)
+    block = _block_of("v", n_blocks, n_parts)
+    # The cogroup's own exchange by block is left to AQE: a small
+    # (incremental) join coalesces into few tasks and Python workers.
+    rows = adj.withColumn("block", block)
+    # Fresh names on the vector side: both sides derive from one plan,
+    # and a cogroup over same-named attributes trips the self-join check.
+    pairs = (
+        adj.select(block.alias("fblock"), F.col("member").alias("fmember"))
+        .repartition(n_parts, "fmember")
+        .distinct()
+    )
+    vecs = pairs.join(feats_iter, pairs["fmember"] == feats_iter["member"]).select(
+        F.col("fblock").alias("block"), "member", "member_features", "kth_sim"
+    )
+    return rows.groupBy("block").cogroup(vecs.groupBy("block")).applyInArrow(
+        _local_join_block(k), _CAND_SCHEMA
+    )
 
 
 def _merge_top_k(edges: DataFrame, k: int) -> DataFrame:
@@ -243,6 +385,64 @@ def _merge_top_k(edges: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _bucket_members(active: DataFrame, k: int, buckets_per_instance: int, seed: int):
+    """A3–A5: bucket geometry and membership over ``active``. One
+    aggregate job reads the per-partition counts (bucket counts follow
+    from them, NND.scala:80-85) and the vector dimension (which sizes
+    the local join's blocks). Each point joins ``buckets_per_instance``
+    buckets drawn from a seeded hash of its features (NND.scala:87-93);
+    bucket ids are namespaced per partition. Returns ``(members,
+    n_active, n_blocks)``, or None when there are no active points."""
+    stats = (
+        active.groupBy("partition")
+        .agg(F.count(F.lit(1)).alias("n"), F.max(F.size("features")).alias("dim"))
+        .collect()
+    )
+    n_active = sum(r["n"] for r in stats)
+    if n_active == 0:
+        return None
+    n_buckets = {
+        r["partition"]: max(1, math.ceil(r["n"] * buckets_per_instance / (2.0 * k)))
+        for r in stats
+    }
+    max_nb = max(n_buckets.values())
+    nb_df = active.sparkSession.createDataFrame(
+        [(int(p), int(b)) for p, b in n_buckets.items()], "partition long, n_buckets long"
+    )
+    draws = F.array_distinct(
+        F.array(
+            *[
+                F.pmod(F.xxhash64("features", F.lit(seed * 7919 + i)), F.col("n_buckets")) + 1
+                for i in range(buckets_per_instance)
+            ]
+        )
+    )
+    members = (
+        active.join(F.broadcast(nb_df), "partition")
+        .withColumn("__b", F.explode(draws))
+        .select(
+            (F.col("__b") + F.lit(int(max_nb)) * F.col("partition")).alias("bucket"),
+            "id",
+            # float32 on the wire (kernels upcast to float64); the bucket
+            # draw above hashes the original float64 features.
+            F.col("features").cast("array<float>").alias("features"),
+        )
+    )
+    dim = max(r["dim"] or 0 for r in stats)
+    return members, n_active, _join_blocks(active.sparkSession, n_active, dim, k)
+
+
+def _init_cands(members: DataFrame, seed: int, k: int, n_blocks: int) -> DataFrame:
+    """A6: in-bucket random init candidates, one Arrow call per block of
+    buckets."""
+    n_parts = _n_parts(members.sparkSession)
+    return (
+        members.withColumn("block", _block_of("bucket", n_blocks, n_parts))
+        .groupBy("block")
+        .applyInArrow(_init_kernel(seed, k), _CAND_SCHEMA)
+    )
+
+
 def build_graph(
     df: DataFrame,
     k: int,
@@ -264,7 +464,6 @@ def build_graph(
     similarity DOUBLE>>``, sorted by similarity desc / id asc; null for
     ``finished`` rows, ``[]`` for active nodes that found none.
     """
-    spark: SparkSession = df.sparkSession
     points = normalize_points(df)
     if validate:
         validate_points(points)
@@ -275,50 +474,20 @@ def build_graph(
         .persist()
     )
 
-    # --- A3/A4: partition histogram → per-partition bucket counts ------
-    hist = {r["partition"]: r["count"] for r in active.groupBy("partition").count().collect()}
-    n_active = sum(hist.values())
-    if n_active == 0:
+    geo = _bucket_members(active, k, buckets_per_instance, seed)
+    if geo is None:
         active.unpersist()
         return points.withColumn("neighbors", F.lit(None).cast(_OUT_NEIGHBOR))
-    n_buckets = {p: max(1, math.ceil(c * buckets_per_instance / (2.0 * k))) for p, c in hist.items()}
-    max_nb = max(n_buckets.values())
-    nb_df = spark.createDataFrame(
-        [(int(p), int(b)) for p, b in n_buckets.items()], "partition long, n_buckets long"
-    )
-
-    # --- A5: deterministic bucket assignment (seeded by feature hash,
-    # NND.scala:87-93); bucket ids namespaced per partition ------------
-    draws = F.array_distinct(
-        F.array(
-            *[
-                F.pmod(F.xxhash64("features", F.lit(seed * 7919 + i)), F.col("n_buckets")) + 1
-                for i in range(buckets_per_instance)
-            ]
-        )
-    )
-    members = (
-        active.join(F.broadcast(nb_df), "partition")
-        .withColumn("__b", F.explode(draws))
-        .select(
-            (F.col("__b") + F.lit(int(max_nb)) * F.col("partition")).alias("bucket"),
-            "id",
-            # float32 on the wire (see `feats` below); the bucket draw above
-            # hashes the original float64 features, so init is unchanged.
-            F.col("features").cast("array<float>").alias("features"),
-        )
-    )
+    members, n_active, n_blocks = geo
 
     # --- A6/A7: in-bucket random init + per-node top-K merge -----------
-    init_cands = members.groupBy("bucket").applyInPandas(
-        _init_kernel(seed, k), _CAND_SCHEMA
-    )
+    init_cands = _init_cands(members, seed, k, n_blocks)
     graph = _merge_top_k(init_cands.withColumn("is_b", F.lit(False)), k)
     graph = graph.localCheckpoint(eager=True)
 
     graph = _descend(
         active, graph, k, max_iterations, early_termination, sample_rate,
-        seed, n_active, on_iteration,
+        seed, n_active, n_blocks, on_iteration,
     )
     result = _assemble(points, graph)
     active.unpersist()
@@ -330,8 +499,8 @@ def _sample_reverse(
 ) -> DataFrame:
     """A9 (NND.scala:146-152): keep ``max(ceil(ρ·|R(v)|), 1)`` reverse
     edges per target ``v`` — the reference's shuffle-control knob, since
-    every surviving member ships its feature vector into the group-by-v
-    exchange. Selection order is a seeded hash of the member id, so the
+    every surviving member adds a row to its group and, unless its block
+    already holds it, a feature vector to the local join's exchange. Selection order is a seeded hash of the member id, so the
     draw is deterministic per (seed, iteration) and rotates across
     iterations. ``ρ=1`` short-circuits: no window, no extra shuffle."""
     if sample_rate >= 1.0:
@@ -360,6 +529,7 @@ def _descend(
     sample_rate: float,
     seed: int,
     threshold_n: int,
+    n_blocks: int,
     on_iteration=None,
 ) -> DataFrame:
     """The NN-Descent iteration loop (A8–A13) from a seeded working
@@ -367,14 +537,22 @@ def _descend(
     O(N·K) per-iteration explode/merge is the work itself (incremental
     updates go through :func:`_descend_sparse`, which bounds every
     exchange to the touched neighborhood). ``threshold_n`` is the N in
-    the ``updated ≤ δ·K·N`` stop rule."""
-    # Features ship as float32: halves the dominant exchange (group-by-v
-    # feature routing); kernels upcast to float64 for the distance math.
+    the ``updated ≤ δ·K·N`` stop rule; ``n_blocks`` sizes the local
+    join (:func:`_join_blocks`)."""
+    # Features ship as float32: halves the dominant exchange (the
+    # per-block feature routing); kernels upcast to float64 for the math.
     # Output similarities deviate from exact-float64 by ~1e-7 relative —
     # irrelevant for an approximate-KNN contract (recall-tested).
-    feats = active.select(
-        F.col("id").alias("member"),
-        F.col("features").cast("array<float>").alias("member_features"),
+    # Cached hash-partitioned by member: the local join's member-keyed
+    # lookup then finds every vector in place, and vectors cross one
+    # exchange per iteration, into their blocks (:func:`_local_join`).
+    feats = (
+        active.select(
+            F.col("id").alias("member"),
+            F.col("features").cast("array<float>").alias("member_features"),
+        )
+        .repartition(_n_parts(active.sparkSession), "member")
+        .persist()
     )
 
     iterations_run = 0
@@ -391,25 +569,16 @@ def _descend(
         rev = edges.select(F.col("dst").alias("v"), F.col("src").alias("member"), "is_new")
         rev = _sample_reverse(rev, sample_rate, seed, iterations_run)
 
-        # A10: A(v) = B(v) ∪ sampled-R(v) ∪ {v}; features attach via one
-        # equi-join (the only place vectors are shipped). Each member also
-        # carries its current K-th neighbor similarity — one double that
-        # lets the kernel prune candidates which cannot enter the top-K.
+        # A10: A(v) = B(v) ∪ sampled-R(v) ∪ {v} as raw id rows (the local
+        # join dedups in-block); vectors attach once per block. Each
+        # member also carries its current K-th neighbor similarity — one
+        # double that lets the kernel prune candidates which cannot enter
+        # the top-K.
         fwd = edges.select(F.col("src").alias("v"), F.col("dst").alias("member"), "is_new")
         self_m = active.select(
             F.col("id").alias("v"), F.col("id").alias("member"), F.lit(False).alias("is_new")
         )
-        # Dedup (v, member) BEFORE features attach: B(v) and sampled-R(v)
-        # overlap heavily once the graph converges (mutual neighbors), and
-        # every duplicate dropped here is one feature vector that never
-        # enters the big group-by-v exchange. The dedup shuffle itself
-        # moves id-only rows — cheap.
-        adj = (
-            fwd.unionByName(rev)
-            .unionByName(self_m)
-            .groupBy("v", "member")
-            .agg(F.max("is_new").alias("is_new"))
-        )
+        adj = fwd.unionByName(rev).unionByName(self_m)
         kth = graph.select(
             F.col("id").alias("member"),
             F.when(
@@ -421,12 +590,10 @@ def _descend(
         feats_iter = feats.join(kth, "member", "left").withColumn(
             "kth_sim", F.coalesce("kth_sim", F.lit(float("-inf")))
         )
-        adj_feat = adj.join(feats_iter, "member").select(
-            "v", "member", "member_features", "is_new", "kth_sim"
-        )
 
-        # A11: local join (numpy kernel) → id-only candidate stream.
-        cands = adj_feat.groupBy("v").applyInPandas(_local_join_kernel(k), _CAND_SCHEMA)
+        # A11: local join (numpy, one Arrow call per block) → id-only
+        # candidate stream.
+        cands = _local_join(adj, feats_iter, k, n_blocks)
 
         old_edges = graph.select(
             F.col("id"), F.explode("neighbors").alias("nb")
@@ -450,6 +617,7 @@ def _descend(
             on_iteration(iterations_run, int(updated))
         if updated <= early_termination * k * threshold_n:
             break
+    feats.unpersist()
     return graph
 
 
@@ -492,6 +660,7 @@ def _descend_sparse(
     sample_rate: float,
     seed: int,
     threshold_n: int,
+    n_blocks: int,
     on_iteration=None,
     reverse: DataFrame | None = None,
 ) -> DataFrame:
@@ -614,12 +783,7 @@ def _descend_sparse(
         self_m = live_v.select(
             "v", F.col("v").alias("member"), F.lit(False).alias("is_new")
         )
-        adj = (
-            fwd.unionByName(rev)
-            .unionByName(self_m)
-            .groupBy("v", "member")
-            .agg(F.max("is_new").alias("is_new"))
-        )
+        adj = fwd.unionByName(rev).unionByName(self_m)
         member_ids = (
             adj.select(F.col("member").alias("id"))
             .distinct()
@@ -643,15 +807,10 @@ def _descend_sparse(
             .join(kth, "member", "left")
             .withColumn("kth_sim", F.coalesce("kth_sim", F.lit(float("-inf"))))
         )
-        adj_feat = adj.join(feats_iter, "member").select(
-            "v", "member", "member_features", "is_new", "kth_sim"
-        )
 
         # A11 over live groups; checkpoint — the stream is read twice
         # (affected ids + merge input) and is O(touched·K) small.
-        cands = adj_feat.groupBy("v").applyInPandas(
-            _local_join_kernel(k), _CAND_SCHEMA
-        ).localCheckpoint(eager=True)
+        cands = _local_join(adj, feats_iter, k, n_blocks).localCheckpoint(eager=True)
         affected = cands.select("id").distinct().localCheckpoint(eager=True)
         aff_b = F.broadcast(affected)
 
@@ -718,37 +877,17 @@ def _update_core(
     or None when the batch is empty. No step shuffles more than the
     touched neighborhood; ``prev_nb`` and ``active`` are only scanned.
     """
-    spark: SparkSession = active.sparkSession
     n_new = new_ids.count()
     if n_new == 0:
         return None
 
     # Bucket geometry over ALL actives (same formula as build_graph, so
-    # old members hash into consistent buckets). The groupBy is
+    # old members hash into consistent buckets). The aggregate is
     # map-side-combined: O(partitions), not O(N), moves.
-    hist = {r["partition"]: r["count"] for r in active.groupBy("partition").count().collect()}
-    n_buckets = {p: max(1, math.ceil(c * buckets_per_instance / (2.0 * k))) for p, c in hist.items()}
-    max_nb = max(n_buckets.values())
-    nb_df = spark.createDataFrame(
-        [(int(p), int(b)) for p, b in n_buckets.items()], "partition long, n_buckets long"
-    )
-    draws = F.array_distinct(
-        F.array(
-            *[
-                F.pmod(F.xxhash64("features", F.lit(seed * 7919 + i)), F.col("n_buckets")) + 1
-                for i in range(buckets_per_instance)
-            ]
-        )
-    )
-    members = (
-        active.join(F.broadcast(nb_df), "partition")
-        .withColumn("__b", F.explode(draws))
-        .select(
-            (F.col("__b") + F.lit(int(max_nb)) * F.col("partition")).alias("bucket"),
-            "id",
-            F.col("features").cast("array<float>").alias("features"),
-        )
-    )
+    geo = _bucket_members(active, k, buckets_per_instance, seed)
+    if geo is None:
+        return None
+    members, _, n_blocks = geo
     # Only buckets holding >= 1 new point produce candidates that can
     # involve a new point; prune the rest before any feature moves.
     # BOTH prunes are broadcast joins: the O(N·draws) member stream
@@ -759,9 +898,7 @@ def _update_core(
         .distinct()
     )
     members = members.join(F.broadcast(live_buckets), "bucket", "left_semi")
-    init_cands = members.groupBy("bucket").applyInPandas(
-        _init_kernel(seed, k), _CAND_SCHEMA
-    )
+    init_cands = _init_cands(members, seed, k, n_blocks)
     # Drop candidates where both endpoints are old (their graph entries
     # are already converged; re-initializing them would only add noise).
     new_flag = F.broadcast(new_ids.withColumn("__new", F.lit(True)))
@@ -792,7 +929,7 @@ def _update_core(
 
     return _descend_sparse(
         active, prev_nb, hot0, k, max_iterations, early_termination,
-        sample_rate, seed, n_new, on_iteration, reverse=reverse,
+        sample_rate, seed, n_new, n_blocks, on_iteration, reverse=reverse,
     )
 
 

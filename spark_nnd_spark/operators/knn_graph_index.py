@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from spark_nnd_spark.nnd.descent import build_graph, update_graph_delta
 from spark_nnd_spark.operators import index_lifecycle as IL
-from spark_nnd_spark.schemas import normalize_points
+from spark_nnd_spark.schemas import normalize_points, validate_points
 
 _NEIGHBOR_T = "array<struct<id bigint, similarity double>>"
 
@@ -428,6 +428,9 @@ def extend_knn_graph_index(
     upsert: the batch's version of the point wins.
     """
     new_pts = normalize_points(new_points).localCheckpoint(eager=True)
+    # one small job over the checkpointed batch: a NaN or ragged vector
+    # fails here, before anything is written
+    validate_points(new_pts)
     # full upsert via the shared kernel: tombstoned AND still-live
     # overlap purged from points + base adjacency + reverse sidecar +
     # any update deltas, so the batch's version of each id wins; the

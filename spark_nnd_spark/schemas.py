@@ -79,13 +79,24 @@ def validate_points(df: DataFrame) -> None:
     wrong answers (NND.scala:288).
 
     One aggregation job checks everything: duplicate ids, null features,
-    inconsistent dimensionality.
+    inconsistent dimensionality, and vectors holding a NaN, an infinity
+    or a null element (a NaN vector would otherwise come back from a
+    search as the top hit, since NaN sorts above every number).
     """
     stats = df.agg(
         F.count("id").alias("n"),
         F.countDistinct("id").alias("n_ids"),
         F.sum(F.when(F.col("features").isNull(), 1).otherwise(0)).alias("null_feats"),
         F.countDistinct(F.size("features")).alias("n_dims"),
+        F.sum(
+            F.when(
+                F.exists(
+                    "features",
+                    lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf")),
+                ),
+                1,
+            ).otherwise(0)
+        ).alias("non_finite"),
     ).first()
     if stats.n == 0:
         return
@@ -95,3 +106,7 @@ def validate_points(df: DataFrame) -> None:
         raise InvalidPointsError(f"{stats.null_feats} rows have null features")
     if stats.n_dims > 1:
         raise InvalidPointsError(f"inconsistent feature dimensionality: {stats.n_dims} distinct sizes")
+    if stats.non_finite:
+        raise InvalidPointsError(
+            f"{stats.non_finite} rows have NaN, infinite or null feature values"
+        )

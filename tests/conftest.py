@@ -43,10 +43,14 @@ def spark():
     # the scale scripts, which honor $SPARK_GRAFT_CPUS untouched.
     import os
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ["SPARK_GRAFT_CPUS"] = str(min(int(cpus), 8))
+    prev = os.environ.get("SPARK_GRAFT_CPUS")
+    os.environ["SPARK_GRAFT_CPUS"] = str(min(int(prev or 32), 8))
     s = get_spark(app_name="spark_nnd_spark_tests", shuffle_partitions=8)
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
+    # restore the caller's environment exactly: unset stays unset
+    if prev is None:
+        del os.environ["SPARK_GRAFT_CPUS"]
+    else:
+        os.environ["SPARK_GRAFT_CPUS"] = prev
     yield s
 
 
