@@ -385,22 +385,87 @@ def _merge_top_k(edges: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _merge(b_rows: DataFrame, cands: DataFrame, k: int) -> DataFrame:
+    """A7/A12 merge of one round: the current lists of ``b_rows`` (id,
+    neighbors), exploded as existing-B edges, with the id-only
+    candidate stream ``cands`` (id, nb_id, sim) — see
+    :func:`_merge_top_k`."""
+    old_edges = b_rows.select("id", F.explode("neighbors").alias("nb")).select(
+        "id", F.col("nb.id").alias("nb_id"), F.col("nb.similarity").alias("sim"),
+        F.lit(True).alias("is_b"),
+    )
+    return _merge_top_k(
+        old_edges.unionByName(cands.withColumn("is_b", F.lit(False))), k
+    )
+
+
+def _kth_sim(rows: DataFrame, k: int) -> DataFrame:
+    """(member, kth_sim): each row's current K-th neighbor similarity,
+    ``-inf`` while its list holds fewer than K — one double per member
+    that lets the local join prune candidates which cannot enter the
+    top-K."""
+    return rows.select(
+        F.col("id").alias("member"),
+        F.when(F.size("neighbors") >= k, F.element_at("neighbors", k)["similarity"])
+        .otherwise(F.lit(float("-inf")))
+        .alias("kth_sim"),
+    )
+
+
+def _with_kth(feats: DataFrame, kth: DataFrame) -> DataFrame:
+    """The local join's vector side: (member, member_features) with each
+    member's ``kth_sim`` attached, ``-inf`` for members without a row."""
+    return feats.join(kth, "member", "left").withColumn(
+        "kth_sim", F.coalesce("kth_sim", F.lit(float("-inf")))
+    )
+
+
+def _converged(
+    graph: DataFrame, iteration: int, on_iteration, early_termination: float,
+    k: int, threshold_n: int,
+) -> bool:
+    """A12: the exact count of new entries in ``graph`` (an aggregate,
+    not an accumulator), reported to ``on_iteration``, against the stop
+    rule ``updated ≤ δ·K·N`` (NND.scala:259-262)."""
+    updated = graph.agg(
+        F.coalesce(
+            F.sum(F.size(F.filter("neighbors", lambda n: n["is_new"]))), F.lit(0)
+        ).alias("u")
+    ).first()["u"]
+    if on_iteration is not None:
+        on_iteration(iteration, int(updated))
+    return updated <= early_termination * k * threshold_n
+
+
 def _bucket_members(active: DataFrame, k: int, buckets_per_instance: int, seed: int):
     """A3–A5: bucket geometry and membership over ``active``. One
     aggregate job reads the per-partition counts (bucket counts follow
     from them, NND.scala:80-85) and the vector dimension (which sizes
-    the local join's blocks). Each point joins ``buckets_per_instance``
-    buckets drawn from a seeded hash of its features (NND.scala:87-93);
-    bucket ids are namespaced per partition. Returns ``(members,
-    n_active, n_blocks)``, or None when there are no active points."""
+    the local join's blocks). Vectors of more than one length raise
+    ``InvalidPointsError`` here, before any kernel runs — this covers
+    callers that skip :func:`validate_points`, such as an extend whose
+    batch differs in dimension from the stored points. Each point joins
+    ``buckets_per_instance`` buckets drawn from a seeded hash of its
+    features (NND.scala:87-93); bucket ids are namespaced per
+    partition. Returns ``(members, n_active, n_blocks)``, or None when
+    there are no active points."""
     stats = (
         active.groupBy("partition")
-        .agg(F.count(F.lit(1)).alias("n"), F.max(F.size("features")).alias("dim"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("features")).alias("min_dim"),
+            F.max(F.size("features")).alias("max_dim"),
+        )
         .collect()
     )
     n_active = sum(r["n"] for r in stats)
     if n_active == 0:
         return None
+    dims = [d for r in stats for d in (r["min_dim"], r["max_dim"]) if d is not None]
+    if min(dims, default=0) != max(dims, default=0):
+        raise InvalidPointsError(
+            f"feature vectors must be of one length; got {min(dims)}..{max(dims)}"
+        )
     n_buckets = {
         r["partition"]: max(1, math.ceil(r["n"] * buckets_per_instance / (2.0 * k)))
         for r in stats
@@ -428,7 +493,7 @@ def _bucket_members(active: DataFrame, k: int, buckets_per_instance: int, seed: 
             F.col("features").cast("array<float>").alias("features"),
         )
     )
-    dim = max(r["dim"] or 0 for r in stats)
+    dim = max(dims, default=0)
     return members, n_active, _join_blocks(active.sparkSession, n_active, dim, k)
 
 
@@ -500,9 +565,10 @@ def _sample_reverse(
     """A9 (NND.scala:146-152): keep ``max(ceil(ρ·|R(v)|), 1)`` reverse
     edges per target ``v`` — the reference's shuffle-control knob, since
     every surviving member adds a row to its group and, unless its block
-    already holds it, a feature vector to the local join's exchange. Selection order is a seeded hash of the member id, so the
-    draw is deterministic per (seed, iteration) and rotates across
-    iterations. ``ρ=1`` short-circuits: no window, no extra shuffle."""
+    already holds it, a feature vector to the local join's exchange.
+    Selection order is a seeded hash of the member id, so the draw is
+    deterministic per (seed, iteration) and rotates across iterations.
+    ``ρ=1`` short-circuits: no window, no extra shuffle."""
     if sample_rate >= 1.0:
         return rev
     wr = Window.partitionBy("v").orderBy(
@@ -570,52 +636,21 @@ def _descend(
         rev = _sample_reverse(rev, sample_rate, seed, iterations_run)
 
         # A10: A(v) = B(v) ∪ sampled-R(v) ∪ {v} as raw id rows (the local
-        # join dedups in-block); vectors attach once per block. Each
-        # member also carries its current K-th neighbor similarity — one
-        # double that lets the kernel prune candidates which cannot enter
-        # the top-K.
+        # join dedups in-block); vectors attach once per block, each
+        # with its member's K-th neighbor similarity.
         fwd = edges.select(F.col("src").alias("v"), F.col("dst").alias("member"), "is_new")
         self_m = active.select(
             F.col("id").alias("v"), F.col("id").alias("member"), F.lit(False).alias("is_new")
         )
         adj = fwd.unionByName(rev).unionByName(self_m)
-        kth = graph.select(
-            F.col("id").alias("member"),
-            F.when(
-                F.size("neighbors") >= k, F.element_at("neighbors", k)["similarity"]
-            )
-            .otherwise(F.lit(float("-inf")))
-            .alias("kth_sim"),
-        )
-        feats_iter = feats.join(kth, "member", "left").withColumn(
-            "kth_sim", F.coalesce("kth_sim", F.lit(float("-inf")))
-        )
+        feats_iter = _with_kth(feats, _kth_sim(graph, k))
 
         # A11: local join (numpy, one Arrow call per block) → id-only
         # candidate stream.
         cands = _local_join(adj, feats_iter, k, n_blocks)
-
-        old_edges = graph.select(
-            F.col("id"), F.explode("neighbors").alias("nb")
-        ).select(
-            "id", F.col("nb.id").alias("nb_id"), F.col("nb.similarity").alias("sim"),
-            F.lit(True).alias("is_b"),
-        )
-        merged = _merge_top_k(
-            old_edges.unionByName(cands.withColumn("is_b", F.lit(False))), k
-        )
-        graph = merged.localCheckpoint(eager=True)
+        graph = _merge(graph, cands, k).localCheckpoint(eager=True)
         iterations_run += 1
-
-        # A12: exact convergence aggregate (not an accumulator).
-        updated = graph.agg(
-            F.coalesce(
-                F.sum(F.size(F.filter("neighbors", lambda n: n["is_new"]))), F.lit(0)
-            ).alias("u")
-        ).first()["u"]
-        if on_iteration is not None:
-            on_iteration(iterations_run, int(updated))
-        if updated <= early_termination * k * threshold_n:
+        if _converged(graph, iterations_run, on_iteration, early_termination, k, threshold_n):
             break
     feats.unpersist()
     return graph
@@ -623,17 +658,22 @@ def _descend(
 
 def _assemble(points: DataFrame, graph: DataFrame) -> DataFrame:
     """A14: join results back; finished → null, active-no-neighbors → []."""
-    out_neighbors = F.transform(
-        "neighbors", lambda s: F.struct(s["id"].alias("id"), s["similarity"].alias("similarity"))
-    )
     return (
         points.join(graph.select("id", "neighbors"), "id", "left")
         .withColumn(
             "neighbors",
             F.when(F.col("finished"), F.lit(None).cast(_OUT_NEIGHBOR)).otherwise(
-                F.coalesce(out_neighbors, F.array().cast(_OUT_NEIGHBOR))
+                F.coalesce(_out_lists(), F.array().cast(_OUT_NEIGHBOR))
             ),
         )
+    )
+
+
+def _out_lists(col: str = "neighbors"):
+    """Working-schema neighbor array in the output schema: the
+    ``is_new`` flag dropped."""
+    return F.transform(
+        col, lambda s: F.struct(s["id"].alias("id"), s["similarity"].alias("similarity"))
     )
 
 
@@ -789,23 +829,13 @@ def _descend_sparse(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        kth = work_rows(member_ids).select(
-            F.col("id").alias("member"),
-            F.when(
-                F.size("neighbors") >= k,
-                F.element_at("neighbors", k)["similarity"],
-            )
-            .otherwise(F.lit(float("-inf")))
-            .alias("kth_sim"),
-        )
-        feats_iter = (
+        feats_iter = _with_kth(
             feats_all.join(
                 F.broadcast(member_ids.select(F.col("id").alias("member"))),
                 "member",
                 "left_semi",
-            )
-            .join(kth, "member", "left")
-            .withColumn("kth_sim", F.coalesce("kth_sim", F.lit(float("-inf"))))
+            ),
+            _kth_sim(work_rows(member_ids), k),
         )
 
         # A11 over live groups; checkpoint — the stream is read twice
@@ -814,123 +844,20 @@ def _descend_sparse(
         affected = cands.select("id").distinct().localCheckpoint(eager=True)
         aff_b = F.broadcast(affected)
 
-        old_edges = (
-            work_rows(affected)
-            .select("id", F.explode("neighbors").alias("nb"))
-            .select(
-                "id", F.col("nb.id").alias("nb_id"),
-                F.col("nb.similarity").alias("sim"),
-                F.lit(True).alias("is_b"),
-            )
-        )
-        merged = _merge_top_k(
-            old_edges.unionByName(cands.withColumn("is_b", F.lit(False))), k
-        )
+        merged = _merge(work_rows(affected), cands, k)
         # Dirty rows that received no candidates settle: a dense merge
         # of just their own old edges returns the identical list with
         # flags cleared, so clear them in place without a shuffle.
         settled = hot.join(aff_b, "id", "left_anti").select(
-            "id",
-            F.transform(
-                "neighbors",
-                lambda s: F.struct(
-                    s["id"].alias("id"),
-                    s["similarity"].alias("similarity"),
-                    F.lit(False).alias("is_new"),
-                ),
-            ).alias("neighbors"),
+            "id", _flag_old().alias("neighbors")
         )
         hot = merged.unionByName(settled).localCheckpoint(eager=True)
         iterations_run += 1
-
         # A12: only hot rows can carry new flags — same count the dense
         # loop's full aggregate would produce.
-        updated = hot.agg(
-            F.coalesce(
-                F.sum(F.size(F.filter("neighbors", lambda n: n["is_new"]))),
-                F.lit(0),
-            ).alias("u")
-        ).first()["u"]
-        if on_iteration is not None:
-            on_iteration(iterations_run, int(updated))
-        if updated <= early_termination * k * threshold_n:
+        if _converged(hot, iterations_run, on_iteration, early_termination, k, threshold_n):
             break
     return hot
-
-
-def _update_core(
-    prev_nb: DataFrame,
-    active: DataFrame,
-    new_ids: DataFrame,
-    k: int,
-    max_iterations: int,
-    early_termination: float,
-    sample_rate: float,
-    buckets_per_instance: int,
-    seed: int,
-    on_iteration=None,
-    reverse: DataFrame | None = None,
-) -> DataFrame | None:
-    """Shared incremental-update core: seed a HOT working set from the
-    new batch's bucket cohorts, then run the sparse descent. Returns
-    the final hot rows (WORKING schema — every id the update touched),
-    or None when the batch is empty. No step shuffles more than the
-    touched neighborhood; ``prev_nb`` and ``active`` are only scanned.
-    """
-    n_new = new_ids.count()
-    if n_new == 0:
-        return None
-
-    # Bucket geometry over ALL actives (same formula as build_graph, so
-    # old members hash into consistent buckets). The aggregate is
-    # map-side-combined: O(partitions), not O(N), moves.
-    geo = _bucket_members(active, k, buckets_per_instance, seed)
-    if geo is None:
-        return None
-    members, _, n_blocks = geo
-    # Only buckets holding >= 1 new point produce candidates that can
-    # involve a new point; prune the rest before any feature moves.
-    # BOTH prunes are broadcast joins: the O(N·draws) member stream
-    # (features attached) is scanned, never exchanged.
-    live_buckets = (
-        members.join(F.broadcast(new_ids), "id", "left_semi")
-        .select("bucket")
-        .distinct()
-    )
-    members = members.join(F.broadcast(live_buckets), "bucket", "left_semi")
-    init_cands = _init_cands(members, seed, k, n_blocks)
-    # Drop candidates where both endpoints are old (their graph entries
-    # are already converged; re-initializing them would only add noise).
-    new_flag = F.broadcast(new_ids.withColumn("__new", F.lit(True)))
-    init_cands = (
-        init_cands.join(new_flag, "id", "left")
-        .withColumnRenamed("__new", "__new_id")
-        .join(new_flag.withColumnRenamed("id", "nb_id"), "nb_id", "left")
-        .filter(F.col("__new_id").isNotNull() | F.col("__new").isNotNull())
-        .select("id", "nb_id", "sim")
-        .localCheckpoint(eager=True)
-    )
-
-    # Seed hot = merge of ONLY the candidate-receiving rows' prev edges
-    # with the init candidates; everything else stays in prev untouched
-    # (the old path exploded and re-merged the entire prev graph here).
-    affected0 = init_cands.select("id").distinct()
-    prev_edges_aff = (
-        prev_nb.join(F.broadcast(affected0), "id", "left_semi")
-        .select("id", F.explode("neighbors").alias("nb"))
-        .select(
-            "id", F.col("nb.id").alias("nb_id"),
-            F.col("nb.similarity").alias("sim"), F.lit(True).alias("is_b"),
-        )
-    )
-    hot0 = _merge_top_k(
-        prev_edges_aff.unionByName(init_cands.withColumn("is_b", F.lit(False))), k
-    ).localCheckpoint(eager=True)
-
-    return _descend_sparse(
-        active, prev_nb, hot0, k, max_iterations, early_termination,
-        sample_rate, seed, n_new, n_blocks, on_iteration, reverse=reverse,
-    )
 
 
 def update_graph(
@@ -956,6 +883,54 @@ def update_graph(
     merge order), ``df`` is the full current point set; rows absent
     from ``prev`` are the new arrivals.
 
+    The update itself is :func:`update_graph_delta`; this assembles its
+    changed rows over ``prev`` — ``prev``'s list for every id the
+    update left unchanged, the delta's list for every other — and
+    joins them back to ``df`` as :func:`build_graph` does.
+    ``new_ids`` and ``reverse`` pass through to it.
+
+    Returns the same output schema as ``build_graph`` over ``df``.
+    """
+    points = normalize_points(df)
+    if validate:
+        validate_points(points)
+    points = points.persist()
+    prev_nb = prev.select("id", "neighbors").persist()
+    changed = update_graph_delta(
+        prev_nb, points, k, max_iterations, early_termination, sample_rate,
+        buckets_per_instance, seed, on_iteration, new_ids, reverse,
+    ).select("id", "neighbors")
+    stable = prev_nb.join(F.broadcast(changed.select("id")), "id", "left_anti")
+    result = _assemble(points, stable.unionByName(changed))
+    points.unpersist()
+    prev_nb.unpersist()
+    return result
+
+
+def update_graph_delta(
+    prev: DataFrame,
+    df: DataFrame,
+    k: int,
+    max_iterations: int = 3,
+    early_termination: float = 0.01,
+    sample_rate: float = 1.0,
+    buckets_per_instance: int = 4,
+    seed: int = 42,
+    on_iteration=None,
+    new_ids: DataFrame | None = None,
+    reverse: DataFrame | None = None,
+) -> DataFrame:
+    """The incremental update (see :func:`update_graph` for ``prev``
+    and ``df``), returning ONLY the changed rows — (id, neighbors,
+    partition) for every node whose final list differs from ``prev``
+    (new nodes included; a new node that found no neighbors emits no
+    row, matching the read path's empty-list coalesce).
+
+    This is the persisted index family's extend entry point: the full
+    graph is never assembled, so nothing in the job — not the result
+    join, not the diff — is O(corpus). Inputs may be lazy parquet
+    scans; they are read, never cached or checkpointed here.
+
     Incremental shape (BOTH compute and shuffle scale with the new
     batch's TOUCHED NEIGHBORHOOD — O(min(corpus,
     batch·draws·bucket_size·K̄)), since each descent hop activates the
@@ -978,72 +953,6 @@ def update_graph(
     ``reverse`` (optional) supplies prev-graph reverse pairs
     (id=target, src) — e.g. the index family's maintained sidecar —
     so the prev adjacency is never re-exploded for reverse expansion.
-
-    Returns the same output schema as ``build_graph`` over ``df``.
-    """
-    points = normalize_points(df)
-    if validate:
-        validate_points(points)
-
-    active = (
-        points.filter(~F.col("finished"))
-        .select("id", "features", "partition")
-        .persist()
-    )
-    prev_nb = prev.select("id", "neighbors").persist()
-    if new_ids is None:
-        new_ids = (
-            active.select("id").join(prev_nb.select("id"), "id", "left_anti")
-        )
-    new_ids = new_ids.persist()
-
-    hot = _update_core(
-        prev_nb, active, new_ids, k, max_iterations, early_termination,
-        sample_rate, buckets_per_instance, seed, on_iteration, reverse,
-    )
-    if hot is None:
-        result = _assemble(points, prev_nb)
-        active.unpersist()
-        return result
-    stable = prev_nb.join(F.broadcast(hot.select("id")), "id", "left_anti")
-    hot_clean = hot.select(
-        "id",
-        F.transform(
-            "neighbors",
-            lambda s: F.struct(
-                s["id"].alias("id"), s["similarity"].alias("similarity")
-            ),
-        ).alias("neighbors"),
-    )
-    result = _assemble(points, stable.unionByName(hot_clean))
-    active.unpersist()
-    prev_nb.unpersist()
-    new_ids.unpersist()
-    return result
-
-
-def update_graph_delta(
-    prev: DataFrame,
-    df: DataFrame,
-    k: int,
-    max_iterations: int = 3,
-    early_termination: float = 0.01,
-    sample_rate: float = 1.0,
-    buckets_per_instance: int = 4,
-    seed: int = 42,
-    on_iteration=None,
-    new_ids: DataFrame | None = None,
-    reverse: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`update_graph` that returns ONLY the changed rows — (id,
-    neighbors, partition) for every node whose final list differs from
-    ``prev`` (new nodes included; a new node that found no neighbors
-    emits no row, matching the read path's empty-list coalesce).
-
-    This is the persisted index family's extend entry point: the full
-    graph is never assembled, so nothing in the job — not the result
-    join, not the diff — is O(corpus). Inputs may be lazy parquet
-    scans; they are read, never cached or checkpointed here.
     """
     points = normalize_points(df)
     active = points.filter(~F.col("finished")).select(
@@ -1054,24 +963,51 @@ def update_graph_delta(
         new_ids = (
             active.select("id").join(prev_nb.select("id"), "id", "left_anti")
         )
-    hot = _update_core(
-        prev_nb, active, new_ids, k, max_iterations, early_termination,
-        sample_rate, buckets_per_instance, seed, on_iteration, reverse,
-    )
-    spark: SparkSession = df.sparkSession
-    if hot is None:
-        return spark.createDataFrame(
+    n_new = new_ids.count()
+    # Bucket geometry over ALL actives (same formula as build_graph, so
+    # old members hash into consistent buckets). The aggregate is
+    # map-side-combined: O(partitions), not O(N), moves.
+    geo = _bucket_members(active, k, buckets_per_instance, seed) if n_new else None
+    if geo is None:
+        return df.sparkSession.createDataFrame(
             [], f"id long, neighbors {_OUT_NEIGHBOR.simpleString()}, partition long"
         )
-    hot_clean = hot.select(
-        "id",
-        F.transform(
-            "neighbors",
-            lambda s: F.struct(
-                s["id"].alias("id"), s["similarity"].alias("similarity")
-            ),
-        ).alias("neighbors"),
+    members, _, n_blocks = geo
+    # Only buckets holding >= 1 new point produce candidates that can
+    # involve a new point; prune the rest before any feature moves.
+    # BOTH prunes are broadcast joins: the O(N·draws) member stream
+    # (features attached) is scanned, never exchanged.
+    live_buckets = (
+        members.join(F.broadcast(new_ids), "id", "left_semi")
+        .select("bucket")
+        .distinct()
     )
+    members = members.join(F.broadcast(live_buckets), "bucket", "left_semi")
+    init_cands = _init_cands(members, seed, k, n_blocks)
+    # Drop candidates where both endpoints are old (their graph entries
+    # are already converged; re-initializing them would only add noise).
+    new_flag = F.broadcast(new_ids.withColumn("__new", F.lit(True)))
+    init_cands = (
+        init_cands.join(new_flag, "id", "left")
+        .withColumnRenamed("__new", "__new_id")
+        .join(new_flag.withColumnRenamed("id", "nb_id"), "nb_id", "left")
+        .filter(F.col("__new_id").isNotNull() | F.col("__new").isNotNull())
+        .select("id", "nb_id", "sim")
+        .localCheckpoint(eager=True)
+    )
+
+    # Seed hot = merge of ONLY the candidate-receiving rows' prev edges
+    # with the init candidates; everything else stays in prev untouched.
+    affected0 = init_cands.select("id").distinct()
+    hot0 = _merge(
+        prev_nb.join(F.broadcast(affected0), "id", "left_semi"), init_cands, k
+    ).localCheckpoint(eager=True)
+    hot = _descend_sparse(
+        active, prev_nb, hot0, k, max_iterations, early_termination,
+        sample_rate, seed, n_new, n_blocks, on_iteration, reverse=reverse,
+    )
+
+    hot_clean = hot.select("id", _out_lists().alias("neighbors"))
     prev_touched = prev_nb.join(
         F.broadcast(hot.select("id")), "id", "left_semi"
     ).select("id", F.col("neighbors").alias("__old"))

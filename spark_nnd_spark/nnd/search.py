@@ -12,16 +12,18 @@ this module serves queries from the flagship artifact itself.
 
 Algorithm (classic best-first with an ``ef``-bounded candidate pool):
 
-- seed every query with ``n_entry`` deterministic entry points PER
-  GRAPH PARTITION (the graph has no cross-``partition`` edges —
+- seed every query with its ``n_entry`` nearest anchors PER GRAPH
+  PARTITION (the graph has no cross-``partition`` edges —
   NND.scala:296-306 — so per-partition seeding is what makes every
-  walled component reachable). ``n_entry`` is also the coverage knob
-  for NATURAL components: the K-NN graph of well-separated clusters
-  is one component per cluster and greedy search can never cross
-  between them, so seeds must land in every component a true neighbor
-  can live in — size ``n_entry`` to the expected cluster count (a
-  missed component is ~((C-1)/C)^n_entry rare for C same-sized
-  clusters);
+  walled component reachable). The anchors are a supplied coarse entry
+  layer, or else :func:`entry_points`' ``n_entry`` deterministic draws
+  per partition, all of which then seed every query. ``n_entry`` is
+  also the coverage knob for NATURAL components: the K-NN graph of
+  well-separated clusters is one component per cluster and greedy
+  search can never cross between them, so seeds must land in every
+  component a true neighbor can live in — size ``n_entry`` to the
+  expected cluster count (a missed component is ~((C-1)/C)^n_entry
+  rare for C same-sized clusters);
 - iterate: expand the best ``beam`` not-yet-expanded candidates per
   query, score their graph neighbors against the query, keep the
   top-``ef`` pool; stop when no pool entry is unexpanded (or at
@@ -33,7 +35,7 @@ Similarity is the graph's own metric ``1 / (1 + ||q - x||_2)``
 (NND.scala:296-306) — monotone in L2, so top-k under it equals
 L2-nearest-neighbor top-k.
 
-Expansion is UNDIRECTED by default (out-neighbors ∪ reverse
+Expansion is UNDIRECTED (out-neighbors ∪ reverse
 neighbors — the B(v) ∪ R(v) closure NN-Descent iterates with): a pure
 K-NN graph is directed and a far-from-corpus node freshly folded in
 by ``update_graph`` has no in-edges, so directed-only search could
@@ -47,11 +49,12 @@ the corpus three times (adjacency forward + reverse expansion +
 vector fetch), every one a BROADCAST-hash join against an
 O(Q·beam)-row id set: the corpus side never shuffles and queries
 never cartesian with the corpus. The reverse pass is an id-keyed
-lookup into a prebuilt reverse-pair table when one is supplied (the
-persisted family's ``reverse/`` sidecar — no full-adjacency explode
-per iteration); inline serving derives it from the adjacency scan. The driver loop holds only a convergence scalar per round —
-the descent.py A12/A13 discipline (localCheckpoint per iteration,
-``count`` as the stop test).
+lookup into a reverse-pair table: the persisted family's ``reverse/``
+sidecar when one is supplied, else one derived from the adjacency
+before the loop — never a full-adjacency explode per iteration. The
+driver loop holds only a convergence scalar per round — the
+descent.py A12/A13 discipline (localCheckpoint per iteration, a
+``take(1)`` of an unexpanded pool row as the stop test).
 """
 
 from __future__ import annotations
@@ -77,14 +80,15 @@ def entry_points(
     one ALL-ID (no features) shuffle of O(N) rows; the K winners then
     carry their vectors forward. Per-partition because graph edges
     never cross partitions: a single global seed set would leave other
-    partitions' components unreachable."""
+    partitions' components unreachable. Returns (id, features,
+    partition) — the shape of an anchor layer."""
     w = Window.partitionBy("partition").orderBy(
         F.xxhash64("id", F.lit(seed)), F.asc("id")
     )
     return (
         points.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= n_entry)
-        .select("id", "features")
+        .select("id", "features", "partition")
     )
 
 
@@ -100,7 +104,6 @@ def graph_search_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "q_vec",
     points: DataFrame | None = None,
-    include_reverse: bool = True,
     reverse: DataFrame | None = None,
     anchors: DataFrame | None = None,
 ) -> DataFrame:
@@ -115,24 +118,23 @@ def graph_search_topk(
     ``reverse`` optionally supplies a PREBUILT reverse-edge pair table
     (id, src) — every row meaning ``src`` lists ``id`` among its
     neighbors, i.e. exactly ``explode(adjacency)`` keyed by target.
-    With it, the reverse pass of each iteration is a second id-keyed
-    LOOKUP join instead of a full adjacency explode+join — the
-    persisted family (operators/knn_graph_index) maintains this as the
-    ``reverse/`` sidecar, halving the per-iteration corpus scan work
-    and making both expansion sides prunable. Without it (inline
-    serving), the reverse pairs are derived from ``graph`` on the fly.
+    The reverse pass of each iteration is an id-keyed LOOKUP join into
+    it — the persisted family (operators/knn_graph_index) maintains
+    this as the ``reverse/`` sidecar. Without it (inline serving), the
+    pairs are derived from ``graph`` once, before the loop.
 
     ``anchors`` optionally supplies a COARSE ENTRY LAYER (id,
     features, partition — a persisted sample of graph nodes, the
     HNSW-upper-layer move): every query scores the anchor set once and
-    seeds from its ``n_entry`` NEAREST anchors per partition, instead
-    of from ``n_entry`` shared random seeds. Random seeding needs
-    n_entry ≈ the component count for coverage (BENCH_GS_SWEEP:
-    recall 0.19@16 → 1.0@256 on 64 clusters); nearest-anchor seeding
-    lands every seed in the query's own region, so small n_entry
-    reaches the same recall — the anchor scoring pass costs
-    O(|anchors|·Q), the price n_entry=|anchors| random seeding would
-    pay, but the downstream pool/beam stays small.
+    seeds from its ``n_entry`` NEAREST anchors per partition. Without
+    it, the anchors are :func:`entry_points`' ``n_entry`` shared draws
+    per partition, so every one of them seeds every query. Such random
+    seeding needs n_entry ≈ the component count for coverage
+    (BENCH_GS_SWEEP: recall 0.19@16 → 1.0@256 on 64 clusters);
+    nearest-anchor seeding lands every seed in the query's own region,
+    so small n_entry reaches the same recall — the anchor scoring pass
+    costs O(|anchors|·Q), the price n_entry=|anchors| random seeding
+    would pay, but the downstream pool/beam stays small.
 
     Returns (query_id, nb_id, rank, sim), rank 1..k by sim desc / id
     asc — ties broken exactly like the graph build.
@@ -155,47 +157,33 @@ def graph_search_topk(
     points = points.select("id", "features", "partition").localCheckpoint(
         eager=False
     )
-    if reverse is not None:
-        reverse = reverse.select("id", "src").localCheckpoint(eager=False)
+    if reverse is None:
+        reverse = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
+    reverse = reverse.select("id", "src").localCheckpoint(eager=False)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).cast("array<double>").alias("q_vec"),
     )
 
-    # ---- seed pool ---------------------------------------------------
-    if anchors is not None:
-        # coarse layer: per (query, partition) the n_entry NEAREST
-        # anchors seed the pool — query-local entries, not random ones
-        scored_anchors = anchors.select(
-            "id", "features", "partition"
-        ).crossJoin(F.broadcast(q)).select(
-            "query_id",
-            "id",
-            "partition",
-            _sim("q_vec", "features").alias("sim"),
-        )
-        wa = Window.partitionBy("query_id", "partition").orderBy(
-            F.desc("sim"), F.asc("id")
-        )
-        pool = (
-            scored_anchors.withColumn("__r", F.row_number().over(wa))
-            .filter(F.col("__r") <= n_entry)
-            .select(
-                "query_id", "id", "sim", F.lit(False).alias("expanded")
-            )
-        )
-    else:
-        # flat seeding: every query scores the shared entry set
-        entries = entry_points(points, n_entry, seed)
-        pool = (
-            entries.crossJoin(F.broadcast(q))
-            .select(
-                "query_id",
-                "id",
-                _sim("q_vec", "features").alias("sim"),
-                F.lit(False).alias("expanded"),
-            )
-        )
+    # ---- seed pool: per (query, partition) the n_entry NEAREST anchors
+    if anchors is None:
+        anchors = entry_points(points, n_entry, seed)
+    scored_anchors = anchors.select(
+        "id", "features", "partition"
+    ).crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "id",
+        "partition",
+        _sim("q_vec", "features").alias("sim"),
+    )
+    wa = Window.partitionBy("query_id", "partition").orderBy(
+        F.desc("sim"), F.asc("id")
+    )
+    pool = (
+        scored_anchors.withColumn("__r", F.row_number().over(wa))
+        .filter(F.col("__r") <= n_entry)
+        .select("query_id", "id", "sim", F.lit(False).alias("expanded"))
+    )
     pool = _truncate(pool, ef).localCheckpoint(eager=True)
 
     for _ in range(max_iterations):
@@ -210,9 +198,7 @@ def graph_search_topk(
             F.col("__r") <= beam
         )
         f_pairs = frontier.select("query_id", "id")
-        scored = _expand_score(
-            adj, points, q, f_pairs, include_reverse, reverse
-        )
+        scored = _expand_score(adj, points, q, f_pairs, reverse)
         expanded_pool = pool.join(
             F.broadcast(f_pairs.withColumn("__f", F.lit(True))),
             ["query_id", "id"],
@@ -257,8 +243,7 @@ def _expand_score(
     points: DataFrame,
     q: DataFrame,
     f_pairs: DataFrame,
-    include_reverse: bool = True,
-    reverse: DataFrame | None = None,
+    reverse: DataFrame,
 ) -> DataFrame:
     """One search round's candidate generation + scoring — the only
     corpus-touching step, kept as a named unit so the plan contract is
@@ -270,40 +255,26 @@ def _expand_score(
     a dedup shuffle here). A masked candidate id (tombstoned /
     held-out node) simply fails the vector-fetch join and drops out.
 
-    ``include_reverse`` expands the UNDIRECTED graph: besides the
-    frontier's out-neighbors, every node that lists a frontier member
-    among ITS neighbors is a candidate too — the same B(v) ∪ R(v)
-    closure NN-Descent itself iterates with (NND.scala:146-152), and
-    what makes freshly-extended outlier nodes reachable at all (a pure
-    K-NN graph is directed; nothing need point AT a far new node). The
-    reverse pass is either an id-keyed lookup into the prebuilt
-    ``reverse`` pair table (the persisted family's ``reverse/``
-    sidecar — same shape as the forward fetch, prunable by id) or,
-    when none is supplied, a second adjacency SCAN with a broadcast
-    hash join on the exploded neighbor column — zero corpus shuffle
-    either way."""
+    The expansion is over the UNDIRECTED graph: besides the frontier's
+    out-neighbors, every node that lists a frontier member among ITS
+    neighbors is a candidate too — the same B(v) ∪ R(v) closure
+    NN-Descent itself iterates with (NND.scala:146-152), and what makes
+    freshly-extended outlier nodes reachable at all (a pure K-NN graph
+    is directed; nothing need point AT a far new node). The reverse
+    pass is an id-keyed lookup into the ``reverse`` (id, src) pair
+    table — same shape as the forward fetch, prunable by id, zero
+    corpus shuffle."""
     fwd = adj.join(F.broadcast(f_pairs), "id").select(
         "query_id", F.explode("nb_ids").alias("id")
     )
-    if include_reverse:
-        if reverse is not None:
-            rev = reverse.join(F.broadcast(f_pairs), "id").select(
-                "query_id", F.col("src").alias("id")
-            )
-        else:
-            rev = (
-                adj.select(
-                    F.col("id").alias("src"), F.explode("nb_ids").alias("id")
-                )
-                .join(F.broadcast(f_pairs), "id")
-                .select("query_id", F.col("src").alias("id"))
-            )
-        fwd = fwd.unionByName(rev)
+    rev = reverse.join(F.broadcast(f_pairs), "id").select(
+        "query_id", F.col("src").alias("id")
+    )
     # No distinct: a candidate reached via several frontier members
     # scores identically per copy, and the pool merge's groupBy
     # collapses the copies anyway — the dedup exchange here was one
     # full O(Q·beam·K) shuffle per iteration for nothing.
-    cand = fwd
+    cand = fwd.unionByName(rev)
     return (
         points.select("id", "features")
         .join(F.broadcast(cand), "id")

@@ -18,6 +18,10 @@ Layout under ``{path}``:
   expansion reads this as a second id-keyed lookup instead of
   re-deriving reverse edges by exploding the full adjacency every
   iteration — written at build/persist and compact;
+- ``anchors/``    (id, features) hive-partitioned by ``partition`` — the
+  coarse entry layer: a deterministic per-partition sample of stored
+  nodes that searches with ``use_anchors`` seed from — written at
+  build/persist, pruned of tombstoned ids at compact;
 - ``updates/``    (id, neighbors, partition, batch) — append-only
   adjacency DELTAS from ``extend``; a row supersedes the base row (and
   any lower-``batch`` update) for its id;
@@ -57,10 +61,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_nnd_spark.nnd.descent import build_graph, update_graph_delta
+from spark_nnd_spark.nnd.search import entry_points, graph_search_topk
 from spark_nnd_spark.operators import index_lifecycle as IL
 from spark_nnd_spark.schemas import normalize_points, validate_points
 
 _NEIGHBOR_T = "array<struct<id bigint, similarity double>>"
+
+# Upsert/purge table specs (id column, partition column). ``reverse`` is
+# keyed by ``src``: an upserted id's OLD out-edges must leave the sidecar
+# with its old adjacency row (its appearances as a target are resolved at
+# read time). An upserted id's stale anchor vector leaves with its old
+# rows; the batch's version re-enters only via a rebuild sample.
+_TABLES: tuple[IL.TableSpec, ...] = (
+    ("points", "id", "partition"),
+    ("adjacency", "id", "partition"),
+    ("reverse", "src", "partition"),
+    ("anchors", "id", "partition"),
+)
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -81,20 +98,17 @@ def build_knn_graph_index(
     seed: int = 42,
     n_anchors: int = 256,
 ) -> None:
-    """Build the graph (nnd/descent.build_graph) and persist points +
-    adjacency + pinned build params. One NND build, two
-    hive-partitioned writes — nothing beyond what the build itself
-    shuffles."""
-    pts = normalize_points(points)
+    """Build the graph (nnd/descent.build_graph, which validates the
+    points first, so a bad corpus writes nothing) and persist it with
+    :func:`persist_graph_index`."""
     g = build_graph(
-        pts,
+        points,
         k=k,
         max_iterations=max_iterations,
         early_termination=early_termination,
         sample_rate=sample_rate,
         buckets_per_instance=buckets_per_instance,
         seed=seed,
-        validate=False,
     )
     persist_graph_index(
         g, path,
@@ -134,23 +148,12 @@ def persist_graph_index(
         f"{path}/adjacency"
     )
     _write_reverse(spark.read.parquet(f"{path}/adjacency"), path)
-    # coarse entry layer (the HNSW-upper-layer move): a deterministic
-    # per-partition sample of stored nodes with their vectors; searches
-    # opting in (use_anchors) seed from each query's NEAREST anchors
-    # instead of shared random entries — recall at small n_entry
-    from spark_nnd_spark.nnd.search import entry_points  # noqa: PLC0415
-
+    # coarse entry layer (the HNSW-upper-layer move): searches opting in
+    # (use_anchors) seed from each query's NEAREST anchors instead of
+    # shared random entries — recall at small n_entry
     entry_points(
-        spark.read.parquet(f"{path}/points").select(
-            "id", "features", "partition"
-        ),
-        int(n_anchors),
-        int(seed),
-    ).join(
-        spark.read.parquet(f"{path}/points").select("id", "partition"), "id"
-    ).select("id", "features", "partition").write.mode(
-        "overwrite"
-    ).partitionBy("partition").parquet(f"{path}/anchors")
+        spark.read.parquet(f"{path}/points"), int(n_anchors), int(seed)
+    ).write.mode("overwrite").partitionBy("partition").parquet(f"{path}/anchors")
     spark.createDataFrame(
         [(
             int(k), int(max_iterations), float(early_termination),
@@ -213,16 +216,10 @@ def _resolved_reverse(
     update-RESOLVED adjacency: base pairs whose ``src`` has no delta,
     plus the latest delta rows exploded. The base side pays one
     broadcast anti-join on src (O(updated) ids); only the O(updated)
-    delta rows are exploded at read time. Falls back to deriving from
-    the resolved adjacency when the sidecar is absent (an index
-    persisted before the sidecar existed). ``latest`` lets a caller
+    delta rows are exploded at read time. ``latest`` lets a caller
     that already resolved the deltas (read_graph + reverse in one
     probe; the extend) share ONE resolution instead of paying it per
     view."""
-    if not _exists(spark, f"{path}/reverse"):
-        return _rev_pairs(
-            _resolved_adjacency(spark, path, latest)
-        ).select("id", "src")
     base = spark.read.parquet(f"{path}/reverse").select("id", "src")
     if not _exists(spark, f"{path}/updates"):
         return base
@@ -310,8 +307,6 @@ def graph_index_search(
     in BENCH_GS_SWEEP; anchors are masked by the same tombstone +
     exclude rules as every other read, so a retracted anchor can
     neither seed nor surface."""
-    from spark_nnd_spark.nnd.search import graph_search_topk  # noqa: PLC0415
-
     # resolve pending deltas ONCE per probe: the graph view and the
     # reverse sidecar both consume the same checkpointed latest-per-id
     # table instead of each paying its own O(pending deltas) aggregate
@@ -323,24 +318,11 @@ def graph_index_search(
     g = read_graph(spark, path, latest)
     anchors = None
     if use_anchors:
-        if not _exists(spark, f"{path}/anchors"):
-            # silent fallback to random-entry seeding degrades
-            # duplicate-detection recall with no signal (ADVICE r15 —
-            # the BENCH_GRAPH_GATE 129/200 miss was exactly this shape)
-            import logging  # noqa: PLC0415
-
-            logging.getLogger(__name__).warning(
-                "use_anchors=True but %s/anchors does not exist "
-                "(index persisted without anchors?) — falling back to "
-                "random-entry seeding; recall at small n_entry degrades",
-                path,
-            )
-        else:
-            anchors = IL.anti_tombstones(
-                spark.read.parquet(f"{path}/anchors"),
-                IL.read_tombstones(spark, path),
-                "id",
-            )
+        anchors = IL.anti_tombstones(
+            spark.read.parquet(f"{path}/anchors"),
+            IL.read_tombstones(spark, path),
+            "id",
+        )
     # Reverse expansion from the maintained sidecar: mask exactly the
     # SOURCES the inline derivation would lose when its adjacency rows
     # are masked (tombstoned + probe-excluded ids), so sidecar-served
@@ -375,30 +357,6 @@ def graph_index_search(
         reverse=rev,
         anchors=anchors,
     )
-
-
-def _graph_tables(
-    spark: SparkSession | None = None, path: str | None = None
-) -> list[IL.TableSpec]:
-    """Upsert/purge table specs. ``reverse`` is keyed by ``src`` — an
-    upserted id's OLD out-edges must leave the sidecar with its old
-    adjacency row (its appearances as a target are resolved at read
-    time). Included only when the sidecar exists (pre-sidecar
-    indexes)."""
-    tables: list[IL.TableSpec] = [
-        ("points", "id", "partition"), ("adjacency", "id", "partition")
-    ]
-    if spark is not None and path is not None and _exists(
-        spark, f"{path}/reverse"
-    ):
-        tables.append(("reverse", "src", "partition"))
-    if spark is not None and path is not None and _exists(
-        spark, f"{path}/anchors"
-    ):
-        # an upserted id's stale anchor vector must leave with its old
-        # rows; the batch's version re-enters only via a rebuild sample
-        tables.append(("anchors", "id", "partition"))
-    return tables
 
 
 def extend_knn_graph_index(
@@ -436,7 +394,7 @@ def extend_knn_graph_index(
     # any update deltas, so the batch's version of each id wins; the
     # live check reads the O(points) roster, and the purge rewrite
     # only fires on actual overlap
-    tables = _graph_tables(spark, path)
+    tables = list(_TABLES)
     if _exists(spark, f"{path}/updates"):
         tables.append(("updates", "id", None))
     IL.settle_upsert(
@@ -585,7 +543,7 @@ def compact_knn_graph_index(spark: SparkSession, path: str) -> None:
     # reverse sidecar rebuilt from the compacted adjacency — pruned
     # lists mean pruned pairs; zero-tax reverse reads are restored
     _write_reverse(spark.read.parquet(f"{path}/adjacency"), path)
-    if tomb is not None and _exists(spark, f"{path}/anchors"):
+    if tomb is not None:
         anchors = IL.anti_tombstones(
             spark.read.parquet(f"{path}/anchors"), tomb, "id"
         ).localCheckpoint(eager=True)

@@ -449,11 +449,11 @@ def _pq_encode_udf(codebooks: np.ndarray):
     per row (the unrolled variant was a >1000-node janino unit — see
     _pq_space_lit). Numerics are IDENTICAL to the old fold: each
     distance is a sequential left-to-right sum of ``sub`` squared
-    differences in float64 (numpy reduces axes shorter than its
-    pairwise blocksize sequentially; the fold's leading 0.0 is exact),
-    and ``argmin`` returns the FIRST minimum — the array_min struct
-    tie-break (smaller code). Asserted equal to the expression form in
-    tests/test_r16_fixes.py."""
+    differences in float64, accumulated one term at a time (numpy's
+    ``sum`` over 8 or more terms adds them pairwise, a different
+    order; the fold's leading 0.0 is exact), and ``argmin`` returns
+    the FIRST minimum — the array_min struct tie-break (smaller code).
+    Asserted equal to the expression form in tests/test_r16_fixes.py."""
     m, n_codes, sub = codebooks.shape
     cb = codebooks.astype(np.float64).copy()
 
@@ -461,7 +461,10 @@ def _pq_encode_udf(codebooks: np.ndarray):
     def codes_udf(v: pd.Series) -> pd.Series:
         x = np.stack(v.to_numpy()).astype(np.float64)
         xs = x[:, : m * sub].reshape(len(x), m, 1, sub)
-        d = ((xs - cb[None, :, :, :]) ** 2).sum(axis=3)
+        d = np.zeros((len(x), m, n_codes))
+        for t in range(sub):
+            diff = xs[..., t] - cb[None, :, :, t]
+            d += diff * diff
         return pd.Series(list(d.argmin(axis=2).astype(np.int32)))
 
     return codes_udf

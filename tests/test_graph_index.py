@@ -332,8 +332,8 @@ def test_double_extend_content_update_latest_wins(spark, tmp_path):
 
 
 def _derived_reverse(spark, d):
-    """What the inline path derives each iteration: explode of the
-    update-resolved adjacency — the sidecar must equal this exactly."""
+    """What the inline path derives: explode of the update-resolved
+    adjacency — the sidecar must equal this exactly."""
     return {
         (r.id, r.src)
         for r in KG._rev_pairs(  # noqa: SLF001
@@ -381,8 +381,8 @@ def test_reverse_sidecar_equals_derived_through_lifecycle(spark, tmp_path):
 def test_search_reverse_pass_uses_sidecar_lookup_not_explode(spark, tmp_path):
     """Plan contract for the sidecar-served reverse expansion: one
     candidate-generation round explodes ONLY the frontier's forward
-    neighbor lists — the full-adjacency explode the inline derivation
-    pays is gone (its 'Generate explode' count drops from 2 to 1), and
+    neighbor lists — the full-adjacency explode of the inline pair
+    table is gone (its 'Generate explode' count drops from 2 to 1), and
     every corpus-side join stays broadcast-hash."""
     from spark_nnd_spark.nnd.search import _expand_score
 
@@ -401,21 +401,23 @@ def test_search_reverse_pass_uses_sidecar_lookup_not_explode(spark, tmp_path):
         [(9000, 0), (9000, 1)], "query_id long, id long"
     )
     rev = KG._resolved_reverse(spark, d)  # noqa: SLF001
+    # the pair table inline serving derives from the adjacency
+    inline = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
 
     def plan(df):
         return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"  # noqa: SLF001
         )
 
-    with_sidecar = plan(_expand_score(adj, points, q, f_pairs, True, rev))
-    derived = plan(_expand_score(adj, points, q, f_pairs, True, None))
+    with_sidecar = plan(_expand_score(adj, points, q, f_pairs, rev))
+    derived = plan(_expand_score(adj, points, q, f_pairs, inline))
     assert with_sidecar.count("explode(") == 1
     assert derived.count("explode(") == 2
     assert "SortMergeJoin" not in with_sidecar
     assert "CartesianProduct" not in with_sidecar
     # identical candidates either way (the correctness half)
-    a = _expand_score(adj, points, q, f_pairs, True, rev)
-    b = _expand_score(adj, points, q, f_pairs, True, None)
+    a = _expand_score(adj, points, q, f_pairs, rev)
+    b = _expand_score(adj, points, q, f_pairs, inline)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 

@@ -75,10 +75,9 @@ def test_entry_points_cover_every_partition(spark):
     ep = entry_points(
         pts.select("id", "features", "partition"), n_entry=3, seed=42
     )
-    with_part = ep.join(pts.select("id", "partition"), "id")
     per_part = {
         r.partition: r.n
-        for r in with_part.groupBy("partition").agg(F.count("*").alias("n")).collect()
+        for r in ep.groupBy("partition").agg(F.count("*").alias("n")).collect()
     }
     assert set(per_part) == {0, 1, 2, 3}
     assert all(n == 3 for n in per_part.values())
@@ -148,8 +147,10 @@ def test_expand_score_plan_has_no_corpus_shuffle(spark):
         [(0, [0.0] * 8)], "query_id long, q_vec array<double>"
     )
     f_pairs = spark.createDataFrame([(0, 1)], "query_id long, id long")
+    # the inline serving path's reverse-pair table
+    rev = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
     plan = (
-        _expand_score(adj, pts.select("id", "features"), q, f_pairs)
+        _expand_score(adj, pts.select("id", "features"), q, f_pairs, rev)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

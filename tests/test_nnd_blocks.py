@@ -211,8 +211,9 @@ def _lists(df):
 def test_graph_independent_of_blocks_and_partitions(spark, monkeypatch):
     """build_graph and update_graph return bit-identical lists (and
     per-iteration update counts) at 1, 4 and 7 shuffle partitions and
-    when a tiny per-block cap makes one block per group."""
-    from spark_nnd_spark.nnd.descent import build_graph, update_graph
+    when a tiny per-block cap makes one block per group; update_graph's
+    lists are prev with update_graph_delta's rows applied."""
+    from spark_nnd_spark.nnd.descent import build_graph, update_graph, update_graph_delta
 
     rows = make_clustered_points(n_clusters=4, per_cluster=30, dim=8, seed=5, n_partitions=2)
     rows[7] = (rows[7][0], list(rows[6][1]), rows[7][2], rows[6][3], False)  # exact tie
@@ -241,19 +242,40 @@ def test_graph_independent_of_blocks_and_partitions(spark, monkeypatch):
     assert ref[0] and ref[2] and len(ref[1]) == 120
     for key, res in results.items():
         assert res == ref, f"differs at {key}"
+    # update_graph is prev with update_graph_delta's changed rows applied
+    delta = update_graph_delta(prev, pts, k=4, max_iterations=1, seed=9)
+    applied = {r.id: [] for r in pts.select("id").collect()}
+    applied.update(_lists(prev))
+    applied.update(_lists(delta))
+    assert applied == ref[3]
 
 
 def test_extend_rejects_non_finite_vectors(spark, tmp_path):
+    import os
+
     from spark_nnd_spark.operators import knn_graph_index as KG
 
-    pts = spark.createDataFrame(
-        make_clustered_points(n_clusters=4, per_cluster=15, dim=8, seed=2), POINT_DDL
-    )
+    rows = make_clustered_points(n_clusters=4, per_cluster=15, dim=8, seed=2)
     d = str(tmp_path / "g")
-    KG.build_knn_graph_index(pts, d, k=4, max_iterations=1, seed=1)
-    for bad in ([float("nan")] * 8, [1.0] * 7 + [float("inf")]):
+    # a corpus holding an all-NaN point is rejected before anything is written
+    nan_row = (rows[0][0], [float("nan")] * 8, *rows[0][2:])
+    with pytest.raises(InvalidPointsError, match="NaN, infinite or null"):
+        KG.build_knn_graph_index(
+            spark.createDataFrame([nan_row, *rows[1:]], POINT_DDL), d, k=4,
+            max_iterations=1, seed=1,
+        )
+    assert not os.path.exists(d)
+    KG.build_knn_graph_index(
+        spark.createDataFrame(rows, POINT_DDL), d, k=4, max_iterations=1, seed=1
+    )
+    for bad, msg in (
+        ([float("nan")] * 8, "NaN, infinite or null"),
+        ([1.0] * 7 + [float("inf")], "NaN, infinite or null"),
+        # finite, but 4-dim against the index's 8-dim points
+        ([1.0] * 4, "one length"),
+    ):
         batch = spark.createDataFrame([(500, bad, 0, 0, False)], POINT_DDL)
-        with pytest.raises(InvalidPointsError, match="NaN, infinite or null"):
+        with pytest.raises(InvalidPointsError, match=msg):
             KG.extend_knn_graph_index(spark, d, batch)
     assert spark.read.parquet(f"{d}/points").count() == 60
     assert not KG._exists(spark, f"{d}/updates")

@@ -125,18 +125,10 @@ def test_bench_release_analysis_covers_known_consumers():
     at_or_after("_BM25_SCORED_CACHE", "q158_retrieval_eval")
 
 
-def test_pq_encode_udf_equals_expression_form(spark):
-    """The Arrow-batched PQ encode must reproduce the old zip_with/
-    aggregate expression form bit-for-bit: same sequential float64
-    sum order, same first-minimum (smaller-code) tie-break."""
-    import numpy as np
-
+def _pq_expression_codes(df, cb):
+    """PQ codes from the zip_with/aggregate expression form: a
+    sequential float64 fold per distance, first-minimum tie-break."""
     from spark_nnd_spark.operators import similarity as SIM
-
-    rng = np.random.default_rng(7)
-    rows = [(int(i), rng.uniform(-1, 1, 32).tolist()) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = SIM.pq_codebooks(32, 4, 8, 42)
 
     m, n_codes, sub = cb.shape
     v = SIM._as_double("embedding")  # noqa: SLF001
@@ -149,13 +141,48 @@ def test_pq_encode_udf_equals_expression_form(spark):
             dists, lambda d, i: F.struct(d.alias("d"), i.alias("c"))
         )
         code_cols.append(F.array_min(pairs)["c"])
-    old = {
+    return {
         r["id"]: list(r["codes"])
         for r in df.select(
             F.col("vec_id").alias("id"), F.array(*code_cols).alias("codes")
         ).collect()
     }
+
+
+def test_pq_encode_udf_equals_expression_form(spark):
+    """The Arrow-batched PQ encode must reproduce the old zip_with/
+    aggregate expression form bit-for-bit: same sequential float64
+    sum order, same first-minimum (smaller-code) tie-break."""
+    import numpy as np
+
+    from spark_nnd_spark.operators import similarity as SIM
+
+    rng = np.random.default_rng(7)
+    rows = [(int(i), rng.uniform(-1, 1, 32).tolist()) for i in range(300)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cb = SIM.pq_codebooks(32, 4, 8, 42)
     new = {
         r["id"]: list(r["codes"]) for r in SIM.pq_encode(df, cb).collect()
     }
-    assert old == new
+    assert _pq_expression_codes(df, cb) == new
+
+
+def test_pq_encode_sums_left_to_right_on_a_near_tie(spark):
+    """A near-tie that only the summation order decides. Code 0's eight
+    squared differences are 1, 2^-52 and zeros: 1 + 2^-52 in any order.
+    Code 1's are 1 and seven 2^-54: a left-to-right fold drops each
+    2^-54 (below half an ulp of 1) and gives 1.0, so code 1 wins; numpy's
+    pairwise ``sum`` adds the small terms together first, reaches
+    1 + 2^-52, ties, and picks code 0."""
+    import numpy as np
+
+    from spark_nnd_spark.operators import similarity as SIM
+
+    e = 2.0 ** -27
+    x = [1.0] + [e] * 7
+    cb = np.zeros((1, 2, 8))
+    cb[0, 0, 1] = -e
+    cb[0, 0, 2:] = x[2:]
+    df = spark.createDataFrame([(0, x)], "vec_id long, embedding array<double>")
+    assert _pq_expression_codes(df, cb) == {0: [1]}
+    assert [list(r["codes"]) for r in SIM.pq_encode(df, cb).collect()] == [[1]]
