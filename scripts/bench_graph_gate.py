@@ -5,9 +5,11 @@ micro-batch against doubling corpus sizes — the r14 VERDICT's last
 unmeasured stream.
 
 Claims under test:
-- the PER-BATCH probe is query-bounded (graph_index_search pays
-  O(iterations) broadcast joins; candidate exchanges carry
-  O(Q·beam·K) rows), so gate probe cost stays ~flat while N doubles;
+- the PER-BATCH probe is one scan of each graph partition into its
+  walker (graph_index_search: one Arrow cogroup, a job count that does
+  not depend on the hop count), and the walk itself is O(Q·iters·beam·K)
+  scored candidates, so gate probe cost grows only with that scan
+  while N doubles;
 - ADMISSION (admit_novel=True → extend_knn_graph_index) scales with
   the batch's novel rows' bucket-cohort neighborhood, not the corpus
   (the update_graph_delta contract measured in BENCH_GRAPH_INDEX);

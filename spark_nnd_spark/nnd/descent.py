@@ -148,10 +148,10 @@ def _block_of(key: str, n_blocks: int, n_parts: int):
 
 
 def _float_matrix(col) -> np.ndarray:
-    """An Arrow ``list<float>`` column as an (n, dim) float32 matrix.
-    Every list must be non-null and of one length: ragged vectors raise
-    ``InvalidPointsError`` — never a reshape of data whose total length
-    happens to divide evenly."""
+    """An Arrow ``list<float>`` (``list<double>``) column as an (n, dim)
+    float32 (float64) matrix. Every list must be non-null and of one
+    length: ragged vectors raise ``InvalidPointsError`` — never a
+    reshape of data whose total length happens to divide evenly."""
     arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     if len(arr) == 0:
         return np.empty((0, 0), np.float32)

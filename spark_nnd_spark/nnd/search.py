@@ -26,49 +26,66 @@ Algorithm (classic best-first with an ``ef``-bounded candidate pool):
   rare for C same-sized clusters);
 - iterate: expand the best ``beam`` not-yet-expanded candidates per
   query, score their graph neighbors against the query, keep the
-  top-``ef`` pool; stop when no pool entry is unexpanded (or at
-  ``max_iterations``);
+  top-``ef`` pool; stop when no pool entry is unexpanded (or after
+  ``max_iterations`` hops, counted per query);
 - return the pool's exact-scored top-k (scores are computed exactly at
   candidate generation, so no separate rerank pass is needed).
 
 Similarity is the graph's own metric ``1 / (1 + ||q - x||_2)``
 (NND.scala:296-306) — monotone in L2, so top-k under it equals
-L2-nearest-neighbor top-k.
+L2-nearest-neighbor top-k. The walker sums the squared differences
+left to right in float64, as Spark's ``aggregate(zip_with(...))``
+does, so its scores equal the SQL metric's to the last bit.
 
 Expansion is UNDIRECTED (out-neighbors ∪ reverse
 neighbors — the B(v) ∪ R(v) closure NN-Descent iterates with): a pure
 K-NN graph is directed and a far-from-corpus node freshly folded in
 by ``update_graph`` has no in-edges, so directed-only search could
 never reach it; the reverse pass restores reachability for exactly
-that ingest-gate case.
+that ingest-gate case. The walker derives the reverse edges from the
+rows it holds; a listed id that is not among them (a masked or
+retracted node) is dropped.
 
-Scale (100 TB): per-query cost is O(iterations · beam · K) candidate
-rows — independent of corpus size, the property that makes graph
-serving worth building the graph for. Per ITERATION the plan touches
-the corpus three times (adjacency forward + reverse expansion +
-vector fetch), every one a BROADCAST-hash join against an
-O(Q·beam)-row id set: the corpus side never shuffles and queries
-never cartesian with the corpus. The reverse pass is an id-keyed
-lookup into a reverse-pair table: the persisted family's ``reverse/``
-sidecar when one is supplied, else one derived from the adjacency
-before the loop — never a full-adjacency explode per iteration. The
-driver loop holds only a convergence scalar per round — the
-descent.py A12/A13 discipline (localCheckpoint per iteration, a
-``take(1)`` of an unexpanded pool row as the stop test).
+Execution: graph edges never cross ``partition``, so a walk never
+leaves the partition it starts in. The whole search is one Arrow
+cogroup: the graph's rows grouped by ``partition`` on one side, the
+query batch crossed with the partition list on the other, and one
+Python call per partition runs every query's walk in numpy and emits
+its local top-k. One window by ``query_id`` merges the local lists.
+Each partition keeps its OWN ``ef`` pool, seeded from its own
+anchors, so on a graph of P partitions a query walks with up to P·ef
+candidates.
+
+Scale (100 TB): per-query cost is O(iterations · beam · K) scored
+candidates — independent of corpus size, the property that makes graph
+serving worth building the graph for. Per BATCH the plan scans each
+graph partition once into its walker (one exchange keyed by
+``partition``) and the query batch once per partition; the Spark job
+count does not depend on the hop count. Memory bound: one graph
+partition's vectors and adjacency must fit in one Python worker.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_nnd_spark.functions.vector import l2_distance_expr
-
-_POOL_COLS = ("query_id", "id", "sim", "expanded")
+from spark_nnd_spark.nnd.descent import _float_matrix
+from spark_nnd_spark.schemas import InvalidPointsError, has_non_finite
 
 
 def _sim(q: str, x: str):
     return F.lit(1.0) / (F.lit(1.0) + l2_distance_expr(q, x))
+
+
+def _entry_window(seed: int):
+    return Window.partitionBy("partition").orderBy(
+        F.xxhash64("id", F.lit(seed)), F.asc("id")
+    )
 
 
 def entry_points(
@@ -82,11 +99,8 @@ def entry_points(
     never cross partitions: a single global seed set would leave other
     partitions' components unreachable. Returns (id, features,
     partition) — the shape of an anchor layer."""
-    w = Window.partitionBy("partition").orderBy(
-        F.xxhash64("id", F.lit(seed)), F.asc("id")
-    )
     return (
-        points.withColumn("__r", F.row_number().over(w))
+        points.withColumn("__r", F.row_number().over(_entry_window(seed)))
         .filter(F.col("__r") <= n_entry)
         .select("id", "features", "partition")
     )
@@ -103,32 +117,21 @@ def graph_search_topk(
     seed: int = 42,
     query_id_col: str = "query_id",
     query_vec_col: str = "q_vec",
-    points: DataFrame | None = None,
-    reverse: DataFrame | None = None,
     anchors: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k nearest stored neighbors of each query vector, served by
     greedy best-first search over ``graph`` (a ``build_graph`` /
-    ``update_graph`` result: id, features, partition, neighbors).
+    ``update_graph`` result: id, features, partition, neighbors). Rows
+    masked out of ``graph`` can neither seed nor surface, and stale
+    in-list references to them are dropped.
 
-    ``points`` optionally overrides the vector table (id, features,
-    partition) — the persisted family passes its stored vectors so the
-    adjacency table alone never needs to carry features.
-
-    ``reverse`` optionally supplies a PREBUILT reverse-edge pair table
-    (id, src) — every row meaning ``src`` lists ``id`` among its
-    neighbors, i.e. exactly ``explode(adjacency)`` keyed by target.
-    The reverse pass of each iteration is an id-keyed LOOKUP join into
-    it — the persisted family (operators/knn_graph_index) maintains
-    this as the ``reverse/`` sidecar. Without it (inline serving), the
-    pairs are derived from ``graph`` once, before the loop.
-
-    ``anchors`` optionally supplies a COARSE ENTRY LAYER (id,
-    features, partition — a persisted sample of graph nodes, the
-    HNSW-upper-layer move): every query scores the anchor set once and
-    seeds from its ``n_entry`` NEAREST anchors per partition. Without
-    it, the anchors are :func:`entry_points`' ``n_entry`` shared draws
-    per partition, so every one of them seeds every query. Such random
+    ``anchors`` optionally supplies a COARSE ENTRY LAYER (id, ... — a
+    persisted sample of graph nodes, the HNSW-upper-layer move): every
+    query scores its partition's anchors once and seeds from the
+    ``n_entry`` NEAREST. Anchor ids that are not rows of ``graph`` are
+    ignored; an anchor is scored with its row's vector. Without it,
+    the anchors are :func:`entry_points`' ``n_entry`` shared draws per
+    partition, so every one of them seeds every query. Such random
     seeding needs n_entry ≈ the component count for coverage
     (BENCH_GS_SWEEP: recall 0.19@16 → 1.0@256 on 64 clusters);
     nearest-anchor seeding lands every seed in the query's own region,
@@ -136,165 +139,166 @@ def graph_search_topk(
     costs O(|anchors|·Q), the price n_entry=|anchors| random seeding
     would pay, but the downstream pool/beam stays small.
 
+    Query vectors holding a null, NaN or infinite element, of ragged
+    lengths, or of a dimension other than the stored vectors' raise
+    ``InvalidPointsError`` before the walk (one small aggregate over
+    the queries; the stored dimension rides on the aggregate that
+    lists the graph's partitions).
+
     Returns (query_id, nb_id, rank, sim), rank 1..k by sim desc / id
     asc — ties broken exactly like the graph build.
     """
-    if points is None:
-        points = graph.select("id", "features", "partition")
-    adj = (
-        graph.filter(F.col("neighbors").isNotNull())
-        .select(
+    rows = graph.select(
+        "id",
+        F.col("features").cast("array<double>").alias("features"),
+        "partition",
+        F.transform("neighbors", lambda s: s["id"]).alias("nb_ids"),
+    )
+    if anchors is None:
+        is_anchor = F.row_number().over(_entry_window(seed)) <= n_entry
+    else:
+        rows = rows.join(
+            F.broadcast(anchors.select("id", F.lit(True).alias("__a"))),
             "id",
-            F.transform("neighbors", lambda s: s["id"]).alias("nb_ids"),
+            "left",
         )
+        is_anchor = F.coalesce("__a", F.lit(False))
+    rows = rows.select(
+        "id", "features", "partition", "nb_ids", is_anchor.alias("is_anchor")
     )
-    # Materialize the serving tables ONCE (lazily, on first use): an
-    # unmaterialized build_graph result re-runs its assemble join-back
-    # in EVERY iteration's lineage otherwise. The persisted family
-    # (operators/knn_graph_index) passes parquet-backed inputs, where
-    # the checkpoint is a cheap no-op insurance.
-    adj = adj.localCheckpoint(eager=False)
-    points = points.select("id", "features", "partition").localCheckpoint(
-        eager=False
-    )
-    if reverse is None:
-        reverse = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
-    reverse = reverse.select("id", "src").localCheckpoint(eager=False)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).cast("array<double>").alias("q_vec"),
     )
-
-    # ---- seed pool: per (query, partition) the n_entry NEAREST anchors
-    if anchors is None:
-        anchors = entry_points(points, n_entry, seed)
-    scored_anchors = anchors.select(
-        "id", "features", "partition"
-    ).crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "id",
+    parts = graph.groupBy("partition").agg(
+        F.min(F.size("features")).alias("lo"), F.max(F.size("features")).alias("hi")
+    ).collect()
+    _check_queries(q, {d for r in parts for d in (r.lo, r.hi)})
+    part_t = graph.schema["partition"].dataType
+    q = q.withColumn(
         "partition",
-        _sim("q_vec", "features").alias("sim"),
+        F.explode(F.array(*[F.lit(r.partition).cast(part_t) for r in parts])),
     )
-    wa = Window.partitionBy("query_id", "partition").orderBy(
-        F.desc("sim"), F.asc("id")
+    local = rows.groupBy("partition").cogroup(q.groupBy("partition")).applyInArrow(
+        _walk_kernel(k, ef, beam, n_entry, max_iterations),
+        f"query_id {q.schema['query_id'].dataType.simpleString()}, "
+        "nb_id long, sim double",
     )
-    pool = (
-        scored_anchors.withColumn("__r", F.row_number().over(wa))
-        .filter(F.col("__r") <= n_entry)
-        .select("query_id", "id", "sim", F.lit(False).alias("expanded"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("nb_id"))
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nb_id", "rank", "sim")
     )
-    pool = _truncate(pool, ef).localCheckpoint(eager=True)
 
-    for _ in range(max_iterations):
-        # Convergence scalar (descent.py A12 class): the pool is a
-        # localCheckpoint, so this reads memory, not lineage. ANY
-        # unexpanded row means the frontier is non-empty — testing the
-        # flag directly skips the per-iteration rank-window job the
-        # loop used to pay just to decide whether to continue.
-        if not pool.filter(~F.col("expanded")).take(1):
-            break
-        frontier = _rank(pool.filter(~F.col("expanded"))).filter(
-            F.col("__r") <= beam
+
+def _check_queries(q: DataFrame, stored_dims: set) -> None:
+    """Raise ``InvalidPointsError`` for query vectors the walk cannot
+    score: null, NaN or infinite elements, ragged lengths, or a length
+    other than the stored vectors' (``stored_dims``, empty for an empty
+    graph). One aggregate job over the queries."""
+    st = q.agg(
+        F.sum(
+            F.when(F.col("q_vec").isNull() | has_non_finite("q_vec"), 1).otherwise(0)
+        ).alias("bad"),
+        F.min(F.size("q_vec")).alias("lo"),
+        F.max(F.size("q_vec")).alias("hi"),
+    ).first()
+    if st.bad:
+        raise InvalidPointsError(
+            f"{st.bad} query vectors are null or hold a NaN, infinite or null value"
         )
-        f_pairs = frontier.select("query_id", "id")
-        scored = _expand_score(adj, points, q, f_pairs, reverse)
-        expanded_pool = pool.join(
-            F.broadcast(f_pairs.withColumn("__f", F.lit(True))),
-            ["query_id", "id"],
-            "left",
-        ).select(
-            "query_id",
-            "id",
-            "sim",
-            (F.col("expanded") | F.col("__f").isNotNull()).alias("expanded"),
+    dims = {d for d in (st.lo, st.hi) if d is not None}
+    stored_dims = {d for d in stored_dims if d is not None}
+    if len(dims) > 1 or (dims and stored_dims and dims != stored_dims):
+        raise InvalidPointsError(
+            f"query vectors of length {sorted(dims)} against stored vectors "
+            f"of length {sorted(stored_dims)}"
         )
-        # One exchange for dedup + truncate: repartition by query_id
-        # up front — HashPartitioning(query_id) satisfies both the
-        # groupBy's (query_id, id) clustering and the rank window's
-        # query_id partitioning, so neither inserts its own exchange
-        # (the r14 plan paid two per iteration). The exchanged stream
-        # is pool ∪ candidates — query-bounded, never corpus-bounded.
-        merged = (
-            expanded_pool.unionByName(scored)
-            .repartition("query_id")
-            .groupBy("query_id", "id")
-            .agg(
-                F.max("sim").alias("sim"),
-                F.max("expanded").alias("expanded"),
+
+
+def _sims(x: np.ndarray, qv: np.ndarray) -> np.ndarray:
+    """``1/(1+L2)`` of every row of ``x`` against every query of ``qv``
+    as a (len(qv), len(x)) matrix. The squared differences are summed
+    left to right in float64, as Spark's ``aggregate(zip_with(...))``
+    does; numpy's pairwise ``sum`` would differ in the last bit."""
+    acc = np.zeros((len(qv), len(x)))
+    for d in range(x.shape[1]):
+        diff = qv[:, d, None] - x[None, :, d]
+        acc += diff * diff
+    return 1.0 / (1.0 + np.sqrt(acc))
+
+
+def _walk_kernel(k: int, ef: int, beam: int, n_entry: int, max_iterations: int):
+    """One graph partition's walker: ``rows`` holds the partition's
+    graph rows (id, features, nb_ids, is_anchor), ``qs`` the query
+    batch (query_id, q_vec). Every query runs its whole best-first walk
+    here; returns each query's local top-k as (query_id, nb_id, sim).
+
+    Rows are sorted by id, so a row index orders like its id and one
+    ``np.lexsort`` on (index, -sim) ranks by (sim desc, id asc). A
+    pool is kept in that order, so its unexpanded entries are already
+    ranked for the next frontier."""
+
+    def kernel(rows: pa.Table, qs: pa.Table) -> pa.Table:
+        none = np.empty(0, np.int64)
+        out_q, out_nb, out_sim = [none], [none], [np.empty(0)]
+        if rows.num_rows and qs.num_rows:
+            ids = rows.column("id").to_numpy()
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order]
+            x = _float_matrix(rows.column("features"))[order]
+            n = len(ids)
+            pos_of = np.empty(n, np.int64)
+            pos_of[order] = np.arange(n)
+            nb = rows.column("nb_ids").combine_chunks()
+            src = pos_of[np.repeat(
+                np.arange(n), pc.list_value_length(nb).fill_null(0).to_numpy()
+            )]
+            dst = pc.list_flatten(nb).to_numpy()
+            at = np.minimum(np.searchsorted(ids, dst), n - 1)
+            keep = ids[at] == dst  # a dangling id is not among the rows
+            src, dst = src[keep], at[keep]
+            # undirected adjacency (out-neighbors ∪ reverse), as CSR
+            a, b = np.r_[src, dst], np.r_[dst, src]
+            by = np.argsort(a, kind="stable")
+            adj = b[by]
+            ptr = np.r_[0, np.cumsum(np.bincount(a, minlength=n))]
+            anchors = np.flatnonzero(
+                rows.column("is_anchor").to_numpy(zero_copy_only=False)[order]
             )
-        )
-        pool = _truncate(merged, ef).localCheckpoint(eager=True)
+            qv = _float_matrix(qs.column("q_vec"))
+            seed_sims = _sims(x[anchors], qv)
+            for qi in range(len(qv)):
+                top = np.lexsort((anchors, -seed_sims[qi]))[: min(n_entry, ef)]
+                pool, psim = anchors[top], seed_sims[qi][top]
+                done = np.zeros(len(pool), bool)
+                for _ in range(max_iterations):
+                    front = np.flatnonzero(~done)[:beam]
+                    if not len(front):
+                        break
+                    done[front] = True
+                    cand = np.unique(
+                        np.concatenate([adj[ptr[v] : ptr[v + 1]] for v in pool[front]])
+                    )
+                    cand = cand[~np.isin(cand, pool)]
+                    if not len(cand):
+                        continue
+                    pool = np.r_[pool, cand]
+                    psim = np.r_[psim, _sims(x[cand], qv[qi : qi + 1])[0]]
+                    done = np.r_[done, np.zeros(len(cand), bool)]
+                    keep = np.lexsort((pool, -psim))[:ef]
+                    pool, psim, done = pool[keep], psim[keep], done[keep]
+                out_q.append(np.full(min(k, len(pool)), qi))
+                out_nb.append(ids[pool[:k]])
+                out_sim.append(psim[:k])
+        return pa.table({
+            "query_id": qs.column("query_id").take(pa.array(np.concatenate(out_q))),
+            "nb_id": np.concatenate(out_nb),
+            "sim": np.concatenate(out_sim),
+        })
 
-    return (
-        _rank(pool)
-        .filter(F.col("__r") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("nb_id"),
-            F.col("__r").alias("rank"),
-            "sim",
-        )
-    )
-
-
-def _expand_score(
-    adj: DataFrame,
-    points: DataFrame,
-    q: DataFrame,
-    f_pairs: DataFrame,
-    reverse: DataFrame,
-) -> DataFrame:
-    """One search round's candidate generation + scoring — the only
-    corpus-touching step, kept as a named unit so the plan contract is
-    test-assertable (tests/test_plans.py): adjacency fetch and vector
-    fetch are BROADCAST-hash joins against the O(Q·beam) frontier; the
-    corpus side never sort-merge-joins or shuffles — the expansion
-    itself is exchange-free (candidate copies reached via several
-    frontier members are collapsed by the pool merge's groupBy, not by
-    a dedup shuffle here). A masked candidate id (tombstoned /
-    held-out node) simply fails the vector-fetch join and drops out.
-
-    The expansion is over the UNDIRECTED graph: besides the frontier's
-    out-neighbors, every node that lists a frontier member among ITS
-    neighbors is a candidate too — the same B(v) ∪ R(v) closure
-    NN-Descent itself iterates with (NND.scala:146-152), and what makes
-    freshly-extended outlier nodes reachable at all (a pure K-NN graph
-    is directed; nothing need point AT a far new node). The reverse
-    pass is an id-keyed lookup into the ``reverse`` (id, src) pair
-    table — same shape as the forward fetch, prunable by id, zero
-    corpus shuffle."""
-    fwd = adj.join(F.broadcast(f_pairs), "id").select(
-        "query_id", F.explode("nb_ids").alias("id")
-    )
-    rev = reverse.join(F.broadcast(f_pairs), "id").select(
-        "query_id", F.col("src").alias("id")
-    )
-    # No distinct: a candidate reached via several frontier members
-    # scores identically per copy, and the pool merge's groupBy
-    # collapses the copies anyway — the dedup exchange here was one
-    # full O(Q·beam·K) shuffle per iteration for nothing.
-    cand = fwd.unionByName(rev)
-    return (
-        points.select("id", "features")
-        .join(F.broadcast(cand), "id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "id",
-            _sim("q_vec", "features").alias("sim"),
-            F.lit(False).alias("expanded"),
-        )
-    )
-
-
-def _rank(pool: DataFrame) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("id"))
-    return pool.withColumn("__r", F.row_number().over(w))
-
-
-def _truncate(pool: DataFrame, ef: int) -> DataFrame:
-    return _rank(pool).filter(F.col("__r") <= ef).select(*_POOL_COLS)
+    return kernel
 
 
 def brute_topk_l2(

@@ -8,16 +8,17 @@ token stats, covariance moments).
 Layout under ``{path}``:
 
 - ``points/``     (id, features, label, finished) hive-partitioned by
-  ``partition`` — the vector table every probe's fetch join hits;
+  ``partition`` — the vector table every probe's walkers read;
 - ``adjacency/``  (id, neighbors) hive-partitioned by ``partition`` —
   the base graph as of the last build/compaction;
 - ``reverse/``    (id, src) REVERSE-edge pairs hive-partitioned by
   ``partition`` — one row per adjacency edge, keyed by TARGET: ``src``
   lists ``id`` among its neighbors (edges never cross ``partition``,
-  so the pair inherits its row's partition). The search's undirected
-  expansion reads this as a second id-keyed lookup instead of
-  re-deriving reverse edges by exploding the full adjacency every
-  iteration — written at build/persist and compact;
+  so the pair inherits its row's partition). Extend's undirected
+  expansion reads this as an id-keyed lookup instead of re-deriving
+  reverse edges by exploding the full adjacency (a probe's walker
+  derives them from the rows it holds) — written at build/persist and
+  compact;
 - ``anchors/``    (id, features) hive-partitioned by ``partition`` — the
   coarse entry layer: a deterministic per-partition sample of stored
   nodes that searches with ``use_anchors`` seed from — written at
@@ -43,9 +44,9 @@ Scale contract (100 TB):
   anti-join broadcast(update ids) ∪ latest-per-id over the UPDATES
   table alone — no corpus-sized window. Tombstones mask rows via the
   standard broadcast anti-join; stale in-LIST references to retracted
-  or superseded nodes are left in place and die at the probe's
-  vector-fetch join (nnd/search._expand_score), the same delete-log
-  read tax every other family pays until compaction.
+  or superseded nodes are left in place and the probe's walker drops
+  them as ids that are not graph rows (nnd/search), the same
+  delete-log read tax every other family pays until compaction.
 - **compact restores the zero-tax read**: fold updates into the base,
   physically prune tombstoned ids from rows AND neighbor lists,
   clear both logs (tombstones dropped LAST, so a crashed compaction
@@ -217,9 +218,8 @@ def _resolved_reverse(
     plus the latest delta rows exploded. The base side pays one
     broadcast anti-join on src (O(updated) ids); only the O(updated)
     delta rows are exploded at read time. ``latest`` lets a caller
-    that already resolved the deltas (read_graph + reverse in one
-    probe; the extend) share ONE resolution instead of paying it per
-    view."""
+    that already resolved the deltas (the extend) share ONE
+    resolution instead of paying it per view."""
     base = spark.read.parquet(f"{path}/reverse").select("id", "src")
     if not _exists(spark, f"{path}/updates"):
         return base
@@ -257,12 +257,17 @@ def read_graph(
     """The stored graph in ``build_graph`` output shape (id, features,
     label, partition, finished, neighbors), tombstone-masked and
     update-resolved. Neighbor LISTS may still reference retracted /
-    superseded ids until compaction — probes drop those at the
-    vector-fetch join; consumers that need pruned lists run
-    :func:`compact_knn_graph_index` first (or explode-filter
+    superseded ids until compaction — probes drop those as ids that are
+    not among the graph's rows (nnd/search); consumers that need pruned
+    lists run :func:`compact_knn_graph_index` first (or explode-filter
     themselves). ``latest`` optionally shares one delta resolution
     (_latest_updates) with the caller's other views."""
-    tomb = IL.read_tombstones(spark, path)
+    return _read_graph(spark, path, latest, IL.read_tombstones(spark, path))
+
+
+def _read_graph(
+    spark: SparkSession, path: str, latest: DataFrame | None, tomb: DataFrame | None
+) -> DataFrame:
     pts = IL.anti_tombstones(
         spark.read.parquet(f"{path}/points"), tomb, "id"
     )
@@ -307,29 +312,20 @@ def graph_index_search(
     in BENCH_GS_SWEEP; anchors are masked by the same tombstone +
     exclude rules as every other read, so a retracted anchor can
     neither seed nor surface."""
-    # resolve pending deltas ONCE per probe: the graph view and the
-    # reverse sidecar both consume the same checkpointed latest-per-id
-    # table instead of each paying its own O(pending deltas) aggregate
+    # resolve pending deltas and read the tombstone log ONCE per probe:
+    # the graph view and the anchors share them
     latest = (
         _latest_updates(spark, path)
         if _exists(spark, f"{path}/updates")
         else None
     )
-    g = read_graph(spark, path, latest)
+    tomb = IL.read_tombstones(spark, path)
+    g = _read_graph(spark, path, latest, tomb)
     anchors = None
     if use_anchors:
         anchors = IL.anti_tombstones(
-            spark.read.parquet(f"{path}/anchors"),
-            IL.read_tombstones(spark, path),
-            "id",
+            spark.read.parquet(f"{path}/anchors"), tomb, "id"
         )
-    # Reverse expansion from the maintained sidecar: mask exactly the
-    # SOURCES the inline derivation would lose when its adjacency rows
-    # are masked (tombstoned + probe-excluded ids), so sidecar-served
-    # search equals inline search row-for-row. Stale TARGETS need no
-    # mask — a masked candidate dies at the vector-fetch join.
-    rev = _resolved_reverse(spark, path, latest)
-    rev = IL.anti_tombstones(rev, IL.read_tombstones(spark, path), "src")
     if exclude_ids is not None:
         ex = F.broadcast(
             exclude_ids.select(
@@ -337,9 +333,6 @@ def graph_index_search(
             ).distinct()
         )
         g = g.join(ex, "id", "left_anti")
-        rev = rev.join(
-            ex.select(F.col("id").alias("src")), "src", "left_anti"
-        )
         if anchors is not None:
             anchors = anchors.join(ex, "id", "left_anti")
     return graph_search_topk(
@@ -353,8 +346,6 @@ def graph_index_search(
         seed=seed,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        points=g.select("id", "features", "partition"),
-        reverse=rev,
         anchors=anchors,
     )
 
@@ -465,7 +456,7 @@ def retract_from_knn_graph_index(
 ) -> None:
     """Tombstone-retract nodes: O(retracted) append; every read path
     masks their rows immediately, and their appearances inside other
-    nodes' neighbor lists die at the probe's vector-fetch join until
+    nodes' neighbor lists are dropped by the probe's walker until
     compaction physically prunes them."""
     IL.append_tombstones(spark, path, ids)
 

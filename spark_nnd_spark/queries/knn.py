@@ -381,8 +381,8 @@ def _graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     if key not in _GS_CACHE:
         # Mask the held-out ids out of the serving graph: their rows
         # vanish from adjacency AND from the vector table, so a stale
-        # in-list reference to them fails the vector-fetch join and
-        # drops out — the tombstone-read semantics of the persisted
+        # in-list reference to them is not a graph row and the walker
+        # drops it — the tombstone-read semantics of the persisted
         # family (operators/knn_graph_index), applied inline.
         served = _nnd_graph(spark, sf_dir).filter(F.col("id") >= GS_HELDOUT)
         q = _points(spark, sf_dir).filter(F.col("id") < GS_HELDOUT).select(
@@ -541,8 +541,8 @@ def _indexed_graph_recall_oracle() -> str:
 # q211: the q201 index with a GS_EXT_N-id slice retracted and then
 # RE-EXTENDED with identical vectors — the slice's adjacency lives
 # only in the updates table, so search must flow through the
-# resolved-delta read path (resolved adjacency + resolved reverse
-# sidecar). Same logical content as q201's graph, so the brute ground
+# resolved-delta read path (the resolved adjacency, whose lists the
+# walker reverses). Same logical content as q201's graph, so the brute ground
 # truth (and the oracle) is q202's with the method renamed.
 GS_EXT_N = 32
 _GIDX_EXT_CACHE: dict[tuple[str, str], str] = {}
@@ -582,8 +582,8 @@ def q211_extended_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     PENDING update deltas: a slice of the stored graph is retracted
     and re-extended with identical vectors, so its rows live only in
     ``updates/`` and every probe pays the O(updated) resolution path —
-    base-minus-delta adjacency, latest-per-id deltas, and the reverse
-    sidecar resolved against superseded sources. Logical content
+    base-minus-delta adjacency and latest-per-id deltas, whose lists
+    the walker reverses itself. Logical content
     equals q201's graph, so the ground truth is q202's; a regression
     anywhere in retract → readmission upsert → delta append → resolved
     read → search flips floor_ok red in the driver hash."""

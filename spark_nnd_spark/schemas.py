@@ -73,6 +73,13 @@ def normalize_points(df: DataFrame) -> DataFrame:
     )
 
 
+def has_non_finite(col: str):
+    """True for a vector holding a NaN, an infinity or a null element."""
+    return F.exists(
+        col, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf"))
+    )
+
+
 def validate_points(df: DataFrame) -> None:
     """Fail fast on contract violations the reference turned into
     mid-shuffle assertion deaths (NND.scala:132,162,190,222) or silent
@@ -88,15 +95,7 @@ def validate_points(df: DataFrame) -> None:
         F.countDistinct("id").alias("n_ids"),
         F.sum(F.when(F.col("features").isNull(), 1).otherwise(0)).alias("null_feats"),
         F.countDistinct(F.size("features")).alias("n_dims"),
-        F.sum(
-            F.when(
-                F.exists(
-                    "features",
-                    lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf")),
-                ),
-                1,
-            ).otherwise(0)
-        ).alias("non_finite"),
+        F.sum(F.when(has_non_finite("features"), 1).otherwise(0)).alias("non_finite"),
     ).first()
     if stats.n == 0:
         return

@@ -540,8 +540,8 @@ def graph_gate_stream(
     vector as novel).
 
     Same conventions as ``indexed_ann_stream``: foreachBatch because
-    the search is an iterative multi-join loop the incremental planner
-    cannot host; overwrite into ``graph_batch={id}`` so replays rewrite
+    the search is a stateful Arrow walk the incremental planner cannot
+    host; overwrite into ``graph_batch={id}`` so replays rewrite
     their own directory; a probe-only gate never mutates the index, so
     verdicts are a pure function of (query, index) and replay == batch.
 
@@ -557,9 +557,9 @@ def graph_gate_stream(
     retry — the extend upsert purges the overlap first, so the retry
     converges to the same stored state).
 
-    Scale: per batch the search pays O(iterations) broadcast joins
-    against the stored graph — per-query cost O(iters·beam·K),
-    corpus-independent (nnd/search.py); admission work scales with the
+    Scale: per batch the search scans each stored graph partition once
+    into its walker, in a job count independent of the hop count —
+    per-query cost O(iters·beam·K), corpus-independent (nnd/search.py); admission work scales with the
     novel rows (update_graph's incremental contract).
 
     ``use_anchors=True`` seeds each probe from its NEAREST stored

@@ -378,49 +378,6 @@ def test_reverse_sidecar_equals_derived_through_lifecycle(spark, tmp_path):
     assert stored.filter(F.col("id").isin([0, 1])).count() == 0
 
 
-def test_search_reverse_pass_uses_sidecar_lookup_not_explode(spark, tmp_path):
-    """Plan contract for the sidecar-served reverse expansion: one
-    candidate-generation round explodes ONLY the frontier's forward
-    neighbor lists — the full-adjacency explode of the inline pair
-    table is gone (its 'Generate explode' count drops from 2 to 1), and
-    every corpus-side join stays broadcast-hash."""
-    from spark_nnd_spark.nnd.search import _expand_score
-
-    pts = _pts(spark)
-    d = str(tmp_path / "g")
-    KG.build_knn_graph_index(pts, d, k=10, max_iterations=4, seed=42)
-    g = KG.read_graph(spark, d)
-    adj = g.filter(F.col("neighbors").isNotNull()).select(
-        "id", F.transform("neighbors", lambda s: s["id"]).alias("nb_ids")
-    )
-    points = g.select("id", "features", "partition")
-    q = spark.createDataFrame(
-        [(9000, [0.0] * 8)], "query_id long, q_vec array<double>"
-    )
-    f_pairs = spark.createDataFrame(
-        [(9000, 0), (9000, 1)], "query_id long, id long"
-    )
-    rev = KG._resolved_reverse(spark, d)  # noqa: SLF001
-    # the pair table inline serving derives from the adjacency
-    inline = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
-
-    def plan(df):
-        return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"  # noqa: SLF001
-        )
-
-    with_sidecar = plan(_expand_score(adj, points, q, f_pairs, rev))
-    derived = plan(_expand_score(adj, points, q, f_pairs, inline))
-    assert with_sidecar.count("explode(") == 1
-    assert derived.count("explode(") == 2
-    assert "SortMergeJoin" not in with_sidecar
-    assert "CartesianProduct" not in with_sidecar
-    # identical candidates either way (the correctness half)
-    a = _expand_score(adj, points, q, f_pairs, rev)
-    b = _expand_score(adj, points, q, f_pairs, inline)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_anchor_seeded_search_beats_flat_seeding_at_small_entry(spark, tmp_path):
     """The coarse entry layer (HNSW-upper-layer move): with n_anchors
     limited and n_entry tiny, anchor-seeded search must reach at least

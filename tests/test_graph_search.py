@@ -1,7 +1,8 @@
 """Graph-served ANN search (nnd/search.py): recall on the clustered
 fixture, same-seed determinism, partition-wall entry coverage,
-tombstone-masked candidate dropout, and the no-corpus-shuffle plan
-contract of the expand/score step."""
+and tombstone-masked candidate dropout. The walk's plan contract and
+its bit-identity with the former per-hop loop are in
+tests/test_search_walk.py."""
 
 from __future__ import annotations
 
@@ -11,7 +12,6 @@ from pyspark.sql import functions as F
 
 from spark_nnd_spark.nnd.descent import build_graph
 from spark_nnd_spark.nnd.search import (
-    _expand_score,
     brute_topk_l2,
     entry_points,
     graph_search_topk,
@@ -120,8 +120,8 @@ def test_search_reaches_across_partition_walls(spark):
 def test_masked_ids_never_surface(spark):
     """Tombstone-read semantics: masking rows out of the graph removes
     them from adjacency AND the vector table, so stale in-list
-    references to them drop out at the vector-fetch join — results
-    never contain a masked id."""
+    references to them are no graph rows and the walker drops them —
+    results never contain a masked id."""
     pts = _fixture(spark)
     g = build_graph(pts, k=10, max_iterations=3, seed=42, validate=False)
     g = g.localCheckpoint(eager=True)
@@ -132,28 +132,3 @@ def test_masked_ids_never_surface(spark):
     res = graph_search_topk(masked, queries, k=5, ef=32, beam=8, seed=42)
     assert res.filter(F.col("nb_id") % 5 == 0).count() == 0
     assert res.count() == 3 * 5  # still k results each
-
-
-def test_expand_score_plan_has_no_corpus_shuffle(spark):
-    """The only corpus-touching step broadcast-joins the frontier; a
-    SortMergeJoin here would mean the corpus shuffles per iteration."""
-    pts = _fixture(spark)
-    g = build_graph(pts, k=5, max_iterations=2, seed=42, validate=False)
-    # materialized inputs, as graph_search_topk's loop sees them
-    adj = g.filter(F.col("neighbors").isNotNull()).select(
-        "id", F.transform("neighbors", lambda s: s["id"]).alias("nb_ids")
-    ).localCheckpoint(eager=True)
-    q = spark.createDataFrame(
-        [(0, [0.0] * 8)], "query_id long, q_vec array<double>"
-    )
-    f_pairs = spark.createDataFrame([(0, 1)], "query_id long, id long")
-    # the inline serving path's reverse-pair table
-    rev = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
-    plan = (
-        _expand_score(adj, pts.select("id", "features"), q, f_pairs, rev)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
