@@ -5,11 +5,11 @@ micro-batch against doubling corpus sizes — the r14 VERDICT's last
 unmeasured stream.
 
 Claims under test:
-- the PER-BATCH probe is one scan of each graph partition into its
-  walker (graph_index_search: one Arrow cogroup, a job count that does
-  not depend on the hop count), and the walk itself is O(Q·iters·beam·K)
-  scored candidates, so gate probe cost grows only with that scan
-  while N doubles;
+- the PER-BATCH probe ships every stored row through one exchange
+  into its partition's walker (graph_index_search: one Arrow cogroup,
+  a job count that does not depend on the hop count), so gate probe
+  scan and shuffle grow with N, while the walk itself scores
+  O(Q·P·iters·beam·K) candidates on a graph of P partitions;
 - ADMISSION (admit_novel=True → extend_knn_graph_index) scales with
   the batch's novel rows' bucket-cohort neighborhood, not the corpus
   (the update_graph_delta contract measured in BENCH_GRAPH_INDEX);

@@ -3,10 +3,12 @@
 extend + graph-served probe at doubling corpus sizes.
 
 Claims under test (the 10th family's twin of bench_token_stats.py):
-- PROBE shuffle is QUERY-bounded, not corpus-bounded: every corpus
-  touch in the search loop is a broadcast-hash join; the only
-  exchanges carry O(Q·beam·K) candidate rows, so probe shuffle stays
-  ~flat while N doubles (wall grows with the scan, not the shuffle);
+- PROBE runs a fixed number of Spark jobs whatever the hop count, but
+  its shuffle is CORPUS-bounded: every stored row (vector and
+  adjacency) crosses one exchange into its partition's walker per
+  batch (nnd/search.graph_search_topk), so probe shuffle grows with N,
+  while the walk itself scores O(Q·P·iters·beam·K) candidates on a
+  graph of P partitions;
 - EXTEND of a fixed-size batch is O(min(corpus, batch·draws·bucket·K̄))
   in shuffle (update_graph_delta): every exchange is bounded by the
   TOUCHED set — the batch's bucket cohorts plus, per descent hop, the
@@ -152,8 +154,7 @@ def main() -> None:
         b3 = stage_writes(spark)
 
         # probe again THROUGH the pending update deltas: the read-tax
-        # path (resolved adjacency + resolved reverse sidecar) must
-        # stay query-bounded too
+        # path (the resolved adjacency)
         t0 = time.perf_counter()
         n_res2 = KG.graph_index_search(
             spark, path, queries, k=5, ef=64, beam=16, n_entry=64

@@ -11,8 +11,9 @@ nnd/search.py docstring's seeding law, measured):
   recall is gated by n_entry (seed coverage of the query's component,
   ~1-((C-1)/C)^n_entry) and ef/beam cannot buy it back;
 - once seeds cover the components, ef/beam finish the job WITHIN the
-  component — recall saturates at small ef/beam and wall cost stays
-  O(iterations x beam), corpus-independent.
+  component — recall saturates at small ef/beam, and the walk scores
+  O(iterations x beam x K) candidates per query and partition (each
+  batch still ships the stored rows to the walkers once).
 
 Usage: python scripts/bench_gs_sweep.py [N] (default 20000). Writes
 $GS_SWEEP_OUT (default BENCH_GS_SWEEP.json).

@@ -1,68 +1,52 @@
 """Graph-served ANN search: greedy best-first (beam) search over a
-built K-NN graph for out-of-corpus query vectors.
+built K-NN graph for out-of-corpus query vectors — serving queries
+from the reference's own output, the K-NN graph (NND.scala:66), in
+the HNSW/NSW manner (Malkov & Yashunin 2016).
 
-The reference's entire output is the K-NN graph itself
-(`/root/reference/src/main/scala/com/github/fvictorio/nnd/NND.scala:66`,
-``buildGraph -> RDD[(Long, NodeWithNeighbors)]``) — and the single most
-common thing a consumer does with a K-NNG is search it for queries that
-were NOT in the build (HNSW/NSW-style navigable-graph serving; Malkov &
-Yashunin 2016 describe the greedy kernel this re-expresses). The engine
-already serves hash/quantization tiers (LSH, IVF, PQ, MRL, binary);
-this module serves queries from the flagship artifact itself.
-
-Algorithm (classic best-first with an ``ef``-bounded candidate pool):
+Algorithm (best-first with an ``ef``-bounded candidate pool):
 
 - seed every query with its ``n_entry`` nearest anchors PER GRAPH
-  PARTITION (the graph has no cross-``partition`` edges —
-  NND.scala:296-306 — so per-partition seeding is what makes every
-  walled component reachable). The anchors are a supplied coarse entry
-  layer, or else :func:`entry_points`' ``n_entry`` deterministic draws
-  per partition, all of which then seed every query. ``n_entry`` is
-  also the coverage knob for NATURAL components: the K-NN graph of
-  well-separated clusters is one component per cluster and greedy
-  search can never cross between them, so seeds must land in every
-  component a true neighbor can live in — size ``n_entry`` to the
-  expected cluster count (a missed component is ~((C-1)/C)^n_entry
-  rare for C same-sized clusters);
-- iterate: expand the best ``beam`` not-yet-expanded candidates per
-  query, score their graph neighbors against the query, keep the
-  top-``ef`` pool; stop when no pool entry is unexpanded (or after
-  ``max_iterations`` hops, counted per query);
-- return the pool's exact-scored top-k (scores are computed exactly at
-  candidate generation, so no separate rerank pass is needed).
+  PARTITION: the graph has no cross-``partition`` edges
+  (NND.scala:296-306), so per-partition seeding is what makes every
+  walled component reachable. ``n_entry`` is also the coverage knob
+  for NATURAL components (one per well-separated cluster): size it to
+  the expected cluster count, as a missed component is
+  ~((C-1)/C)^n_entry rare for C same-sized clusters;
+- iterate: expand the best ``beam`` unexpanded candidates, score
+  their neighbors against the query, keep the top-``ef`` pool; stop
+  when no pool entry is unexpanded or after ``max_iterations`` hops;
+- return the pool's top-k; scores are exact, so no rerank pass.
 
-Similarity is the graph's own metric ``1 / (1 + ||q - x||_2)``
-(NND.scala:296-306) — monotone in L2, so top-k under it equals
-L2-nearest-neighbor top-k. The walker sums the squared differences
-left to right in float64, as Spark's ``aggregate(zip_with(...))``
-does, so its scores equal the SQL metric's to the last bit.
+Similarity is the graph's metric ``1 / (1 + ||q - x||_2)``, summed
+left to right in float64 as Spark's ``aggregate(zip_with(...))``
+does, so scores equal the SQL metric's to the last bit. Expansion is
+UNDIRECTED (out- ∪ reverse neighbors, NN-Descent's B(v) ∪ R(v)): a
+node freshly folded in by ``update_graph`` has no in-edges, so a
+directed walk could never reach it. The walker derives reverse edges
+from the rows it holds and drops a listed id that is not a row (a
+masked or retracted node).
 
-Expansion is UNDIRECTED (out-neighbors ∪ reverse
-neighbors — the B(v) ∪ R(v) closure NN-Descent iterates with): a pure
-K-NN graph is directed and a far-from-corpus node freshly folded in
-by ``update_graph`` has no in-edges, so directed-only search could
-never reach it; the reverse pass restores reachability for exactly
-that ingest-gate case. The walker derives the reverse edges from the
-rows it holds; a listed id that is not among them (a masked or
-retracted node) is dropped.
+Execution: a walk never leaves its partition, so a batch is one Arrow
+cogroup — the graph's rows grouped by ``partition`` on one side, the
+queries crossed with the partition list on the other, one numpy walk
+per query in the partition's Python call — and one window by
+``query_id`` merges the local top-k lists. Each partition keeps its
+OWN ``ef`` pool, so on a graph of P partitions a query walks P times.
+When partitions leave cores idle, a partition's queries are split
+into chunks, one task and one copy of the partition each
+(:func:`_query_chunks`).
 
-Execution: graph edges never cross ``partition``, so a walk never
-leaves the partition it starts in. The whole search is one Arrow
-cogroup: the graph's rows grouped by ``partition`` on one side, the
-query batch crossed with the partition list on the other, and one
-Python call per partition runs every query's walk in numpy and emits
-its local top-k. One window by ``query_id`` merges the local lists.
-Each partition keeps its OWN ``ef`` pool, seeded from its own
-anchors, so on a graph of P partitions a query walks with up to P·ef
-candidates.
-
-Scale (100 TB): per-query cost is O(iterations · beam · K) scored
-candidates — independent of corpus size, the property that makes graph
-serving worth building the graph for. Per BATCH the plan scans each
-graph partition once into its walker (one exchange keyed by
-``partition``) and the query batch once per partition; the Spark job
-count does not depend on the hop count. Memory bound: one graph
-partition's vectors and adjacency must fit in one Python worker.
+Cost: a query scores O(P · iterations · beam · K) candidates; per
+BATCH every stored row crosses one exchange into its walker, so a
+probe's shuffle and scan are O(corpus); the job count does not depend
+on the hop count. Memory bound: a walker holds a whole graph
+partition (:func:`_check_worker_memory`, raised while the search is
+planned when ``spark.executor.pyspark.memory`` caps the workers).
+``normalize_points`` puts every row in partition 0 by default, which
+caps a searchable corpus at one worker's memory: give a large corpus
+more partitions. Measured (ROADMAP item 3) on graphs of at most
+80,000 rows of at most 32 dims, one to eight partitions, and batches
+of up to 2,000 queries.
 """
 
 from __future__ import annotations
@@ -70,6 +54,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.rdd import _parse_memory
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -82,8 +67,8 @@ def _sim(q: str, x: str):
     return F.lit(1.0) / (F.lit(1.0) + l2_distance_expr(q, x))
 
 
-def _entry_window(seed: int):
-    return Window.partitionBy("partition").orderBy(
+def _entry_window(seed: int, *by: str):
+    return Window.partitionBy(*by).orderBy(
         F.xxhash64("id", F.lit(seed)), F.asc("id")
     )
 
@@ -91,16 +76,12 @@ def _entry_window(seed: int):
 def entry_points(
     points: DataFrame, n_entry: int, seed: int
 ) -> DataFrame:
-    """``n_entry`` deterministic seeds per graph ``partition`` — the
-    rows with the smallest ``xxhash64(id, seed)`` draw, so the choice
-    is stable across runs and rotates with ``seed``. One narrow scan +
-    one ALL-ID (no features) shuffle of O(N) rows; the K winners then
-    carry their vectors forward. Per-partition because graph edges
-    never cross partitions: a single global seed set would leave other
-    partitions' components unreachable. Returns (id, features,
-    partition) — the shape of an anchor layer."""
+    """``n_entry`` deterministic seeds per graph ``partition`` (graph
+    edges never cross partitions): the rows with the smallest
+    ``xxhash64(id, seed)`` draw, stable across runs and rotating with
+    ``seed``. Returns (id, features, partition), an anchor layer."""
     return (
-        points.withColumn("__r", F.row_number().over(_entry_window(seed)))
+        points.withColumn("__r", F.row_number().over(_entry_window(seed, "partition")))
         .filter(F.col("__r") <= n_entry)
         .select("id", "features", "partition")
     )
@@ -125,37 +106,59 @@ def graph_search_topk(
     masked out of ``graph`` can neither seed nor surface, and stale
     in-list references to them are dropped.
 
-    ``anchors`` optionally supplies a COARSE ENTRY LAYER (id, ... — a
-    persisted sample of graph nodes, the HNSW-upper-layer move): every
-    query scores its partition's anchors once and seeds from the
-    ``n_entry`` NEAREST. Anchor ids that are not rows of ``graph`` are
-    ignored; an anchor is scored with its row's vector. Without it,
-    the anchors are :func:`entry_points`' ``n_entry`` shared draws per
-    partition, so every one of them seeds every query. Such random
-    seeding needs n_entry ≈ the component count for coverage
-    (BENCH_GS_SWEEP: recall 0.19@16 → 1.0@256 on 64 clusters);
-    nearest-anchor seeding lands every seed in the query's own region,
-    so small n_entry reaches the same recall — the anchor scoring pass
-    costs O(|anchors|·Q), the price n_entry=|anchors| random seeding
-    would pay, but the downstream pool/beam stays small.
+    ``anchors`` optionally supplies a COARSE ENTRY LAYER (ids of a
+    persisted sample of graph nodes, the HNSW upper-layer move): every
+    query seeds from its partition's ``n_entry`` NEAREST anchors, each
+    scored with its row's vector; ids that are not rows of ``graph``
+    are ignored. Without it, :func:`entry_points`' ``n_entry`` draws
+    per partition seed every query, which needs n_entry ≈ the
+    component count for coverage (BENCH_GS_SWEEP: recall 0.19@16 →
+    1.0@256 on 64 clusters); nearest-anchor seeding reaches that
+    recall at small n_entry for an O(|anchors|·Q) scoring pass.
 
     Query vectors holding a null, NaN or infinite element, of ragged
     lengths, or of a dimension other than the stored vectors' raise
-    ``InvalidPointsError`` before the walk (one small aggregate over
-    the queries; the stored dimension rides on the aggregate that
-    lists the graph's partitions).
+    ``InvalidPointsError``, and a graph partition too large for one
+    Python worker raises ``MemoryError``, before the search runs: one
+    small aggregate over the queries, and the stored sizes ride on the
+    aggregate that lists the graph's partitions.
 
     Returns (query_id, nb_id, rank, sim), rank 1..k by sim desc / id
     asc — ties broken exactly like the graph build.
     """
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vec_col).cast("array<double>").alias("q_vec"),
+    )
+    parts = graph.groupBy("partition").agg(
+        F.count("*").alias("n"),
+        F.min(F.size("features")).alias("lo"),
+        F.max(F.size("features")).alias("hi"),
+        F.max(F.size("neighbors")).alias("k"),
+    ).collect()
+    n_q = _check_queries(q, {d for r in parts for d in (r.lo, r.hi)})
+    sc = graph.sparkSession.sparkContext
+    _check_worker_memory(parts, sc.getConf())
+    n_chunks = _query_chunks(
+        parts, n_q, max_iterations * beam, sc.defaultParallelism
+    )
+    part_t = graph.schema["partition"].dataType
+    q = q.withColumn(
+        "partition",
+        F.explode(F.array(*[F.lit(r.partition).cast(part_t) for r in parts])),
+    ).withColumn("chunk", F.pmod(F.xxhash64("query_id"), F.lit(n_chunks)).cast("int"))
+    # every chunk gets its own copy of the partition's rows
     rows = graph.select(
         "id",
         F.col("features").cast("array<double>").alias("features"),
         "partition",
         F.transform("neighbors", lambda s: s["id"]).alias("nb_ids"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("chunk"),
     )
     if anchors is None:
-        is_anchor = F.row_number().over(_entry_window(seed)) <= n_entry
+        is_anchor = (
+            F.row_number().over(_entry_window(seed, "partition", "chunk")) <= n_entry
+        )
     else:
         rows = rows.join(
             F.broadcast(anchors.select("id", F.lit(True).alias("__a"))),
@@ -163,23 +166,9 @@ def graph_search_topk(
             "left",
         )
         is_anchor = F.coalesce("__a", F.lit(False))
-    rows = rows.select(
-        "id", "features", "partition", "nb_ids", is_anchor.alias("is_anchor")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).cast("array<double>").alias("q_vec"),
-    )
-    parts = graph.groupBy("partition").agg(
-        F.min(F.size("features")).alias("lo"), F.max(F.size("features")).alias("hi")
-    ).collect()
-    _check_queries(q, {d for r in parts for d in (r.lo, r.hi)})
-    part_t = graph.schema["partition"].dataType
-    q = q.withColumn(
-        "partition",
-        F.explode(F.array(*[F.lit(r.partition).cast(part_t) for r in parts])),
-    )
-    local = rows.groupBy("partition").cogroup(q.groupBy("partition")).applyInArrow(
+    key = ("partition", "chunk")
+    rows = rows.select("id", "features", *key, "nb_ids", is_anchor.alias("is_anchor"))
+    local = rows.groupBy(*key).cogroup(q.groupBy(*key)).applyInArrow(
         _walk_kernel(k, ef, beam, n_entry, max_iterations),
         f"query_id {q.schema['query_id'].dataType.simpleString()}, "
         "nb_id long, sim double",
@@ -192,12 +181,13 @@ def graph_search_topk(
     )
 
 
-def _check_queries(q: DataFrame, stored_dims: set) -> None:
+def _check_queries(q: DataFrame, stored_dims: set) -> int:
     """Raise ``InvalidPointsError`` for query vectors the walk cannot
     score: null, NaN or infinite elements, ragged lengths, or a length
     other than the stored vectors' (``stored_dims``, empty for an empty
-    graph). One aggregate job over the queries."""
+    graph). One aggregate job over the queries; returns their count."""
     st = q.agg(
+        F.count("*").alias("n"),
         F.sum(
             F.when(F.col("q_vec").isNull() | has_non_finite("q_vec"), 1).otherwise(0)
         ).alias("bad"),
@@ -215,6 +205,40 @@ def _check_queries(q: DataFrame, stored_dims: set) -> None:
             f"query vectors of length {sorted(dims)} against stored vectors "
             f"of length {sorted(stored_dims)}"
         )
+    return st.n
+
+
+def _check_worker_memory(parts: list, conf) -> None:
+    """Raise ``MemoryError`` when a graph partition's walker would not
+    fit one Python worker: Spark caps each at
+    ``spark.executor.pyspark.memory`` / ``spark.executor.cores``, and
+    none when that memory is not set. A walker peaks at about three
+    float64 copies of each vector and sixteen int64 words per listed
+    neighbor (measured on synthetic partitions of 20,000-60,000 rows)."""
+    mem = conf.get("spark.executor.pyspark.memory", None)
+    if mem is None:
+        return
+    budget = (_parse_memory(mem) << 20) // int(conf.get("spark.executor.cores", "1"))
+    for r in parts:
+        need = 8 * r.n * (3 * (r.hi or 0) + 16 * max(r.k or 0, 0))
+        if need > budget:
+            raise MemoryError(
+                f"graph partition {r.partition} holds {r.n} rows: its search "
+                f"walker needs about {need >> 20} MiB, over the {budget >> 20} MiB "
+                "of one Python worker; split the graph into more partitions"
+            )
+
+
+def _query_chunks(parts: list, n_q: int, hop_work: int, cores: int) -> int:
+    """How many tasks each partition's queries are split across. A
+    chunk is a task with its own copy of the partition, so chunks only
+    take idle cores, and only while a chunk's walk work (queries ×
+    ``hop_work`` × K scored candidates) outweighs its copy: a row
+    shipped to a walker costs about 64 scored candidates (measured on
+    20,000 16-dim rows: ~27 µs a row, ~0.4 µs a candidate)."""
+    n = max((r.n for r in parts), default=1)
+    k = max((r.k or 0 for r in parts), default=0)
+    return max(1, min(cores // max(len(parts), 1), n_q * hop_work * k // (64 * n)))
 
 
 def _sims(x: np.ndarray, qv: np.ndarray) -> np.ndarray:
@@ -229,10 +253,16 @@ def _sims(x: np.ndarray, qv: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.sqrt(acc))
 
 
+def _large(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """A list column with 64-bit offsets, so one partition's lists can
+    combine into one array past 2^31 values."""
+    return col.cast(pa.large_list(col.type.value_type))
+
+
 def _walk_kernel(k: int, ef: int, beam: int, n_entry: int, max_iterations: int):
     """One graph partition's walker: ``rows`` holds the partition's
-    graph rows (id, features, nb_ids, is_anchor), ``qs`` the query
-    batch (query_id, q_vec). Every query runs its whole best-first walk
+    graph rows (id, features, nb_ids, is_anchor), ``qs`` one chunk of
+    the query batch (query_id, q_vec). Every query runs its whole walk
     here; returns each query's local top-k as (query_id, nb_id, sim).
 
     Rows are sorted by id, so a row index orders like its id and one
@@ -247,11 +277,11 @@ def _walk_kernel(k: int, ef: int, beam: int, n_entry: int, max_iterations: int):
             ids = rows.column("id").to_numpy()
             order = np.argsort(ids, kind="stable")
             ids = ids[order]
-            x = _float_matrix(rows.column("features"))[order]
+            x = _float_matrix(_large(rows.column("features")))[order]
             n = len(ids)
             pos_of = np.empty(n, np.int64)
             pos_of[order] = np.arange(n)
-            nb = rows.column("nb_ids").combine_chunks()
+            nb = _large(rows.column("nb_ids")).combine_chunks()
             src = pos_of[np.repeat(
                 np.arange(n), pc.list_value_length(nb).fill_null(0).to_numpy()
             )]

@@ -251,29 +251,17 @@ def _resolved_adjacency(
     )
 
 
-def read_graph(
-    spark: SparkSession, path: str, latest: DataFrame | None = None
-) -> DataFrame:
+def read_graph(spark: SparkSession, path: str) -> DataFrame:
     """The stored graph in ``build_graph`` output shape (id, features,
     label, partition, finished, neighbors), tombstone-masked and
     update-resolved. Neighbor LISTS may still reference retracted /
     superseded ids until compaction — probes drop those as ids that are
     not among the graph's rows (nnd/search); consumers that need pruned
     lists run :func:`compact_knn_graph_index` first (or explode-filter
-    themselves). ``latest`` optionally shares one delta resolution
-    (_latest_updates) with the caller's other views."""
-    return _read_graph(spark, path, latest, IL.read_tombstones(spark, path))
-
-
-def _read_graph(
-    spark: SparkSession, path: str, latest: DataFrame | None, tomb: DataFrame | None
-) -> DataFrame:
-    pts = IL.anti_tombstones(
-        spark.read.parquet(f"{path}/points"), tomb, "id"
-    )
-    adj = IL.anti_tombstones(
-        _resolved_adjacency(spark, path, latest), tomb, "id"
-    )
+    themselves)."""
+    tomb = IL.read_tombstones(spark, path)
+    pts = IL.anti_tombstones(spark.read.parquet(f"{path}/points"), tomb, "id")
+    adj = IL.anti_tombstones(_resolved_adjacency(spark, path), tomb, "id")
     return pts.join(adj.select("id", "neighbors"), "id", "left").select(
         "id", "features", "label", "partition", "finished",
         F.when(F.col("finished"), F.lit(None).cast(_NEIGHBOR_T))
@@ -309,23 +297,11 @@ def graph_index_search(
     ``use_anchors=True`` seeds each query from its NEAREST stored
     anchors (the coarse entry layer persisted at build) instead of
     shared random entries — the recall-at-small-n_entry mode measured
-    in BENCH_GS_SWEEP; anchors are masked by the same tombstone +
-    exclude rules as every other read, so a retracted anchor can
+    in BENCH_GS_SWEEP. The walker ignores an anchor id that is not a
+    row of the masked graph, so a retracted or excluded anchor can
     neither seed nor surface."""
-    # resolve pending deltas and read the tombstone log ONCE per probe:
-    # the graph view and the anchors share them
-    latest = (
-        _latest_updates(spark, path)
-        if _exists(spark, f"{path}/updates")
-        else None
-    )
-    tomb = IL.read_tombstones(spark, path)
-    g = _read_graph(spark, path, latest, tomb)
-    anchors = None
-    if use_anchors:
-        anchors = IL.anti_tombstones(
-            spark.read.parquet(f"{path}/anchors"), tomb, "id"
-        )
+    g = read_graph(spark, path)
+    anchors = spark.read.parquet(f"{path}/anchors").select("id") if use_anchors else None
     if exclude_ids is not None:
         ex = F.broadcast(
             exclude_ids.select(
@@ -333,8 +309,6 @@ def graph_index_search(
             ).distinct()
         )
         g = g.join(ex, "id", "left_anti")
-        if anchors is not None:
-            anchors = anchors.join(ex, "id", "left_anti")
     return graph_search_topk(
         g,
         queries,

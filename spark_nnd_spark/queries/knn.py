@@ -398,8 +398,8 @@ def _graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q199_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-corpus ANN serving FROM the flagship K-NN graph: held-out
     queries (vec_id < 10) greedy-searched over the q25 build with those
-    ids masked (nnd/search.py — per-query cost O(iters·beam·K),
-    corpus-independent). Rows-only driver check (an iterative seeded
+    ids masked (nnd/search.py — per-query walk cost O(P·iters·beam·K)
+    on a graph of P partitions). Checked by rows only (an iterative seeded
     NND artifact is not SQL-replayable); q200 is the hash-checked
     recall grade of exactly this result."""
     return (

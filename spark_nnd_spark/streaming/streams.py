@@ -557,10 +557,12 @@ def graph_gate_stream(
     retry — the extend upsert purges the overlap first, so the retry
     converges to the same stored state).
 
-    Scale: per batch the search scans each stored graph partition once
-    into its walker, in a job count independent of the hop count —
-    per-query cost O(iters·beam·K), corpus-independent (nnd/search.py); admission work scales with the
-    novel rows (update_graph's incremental contract).
+    Scale: per batch the search ships every stored row through one
+    exchange into its partition's walker, in a job count independent
+    of the hop count, so probe shuffle grows with the stored corpus;
+    per-query walk cost is O(P·iters·beam·K) on a graph of P
+    partitions (nnd/search.py). Admission work scales with the novel
+    rows (update_graph's incremental contract).
 
     ``use_anchors=True`` seeds each probe from its NEAREST stored
     anchors (the coarse entry layer persisted at build) instead of

@@ -1,7 +1,8 @@
 """The partition-local search walk (nnd/search.py): one Arrow call per
 graph partition must return exactly what the per-hop DataFrame loop it
 replaced returned, in a number of Spark jobs that does not depend on
-the hop count, and bad query vectors must fail loudly.
+the hop count, split over tasks without changing a row, and bad query
+vectors or an oversized partition must fail loudly.
 
 ``_reference_search`` is a copy of the deleted loop (seeding, the
 per-hop ``_expand_score`` round and the ``_truncate`` pool merge), kept
@@ -13,6 +14,7 @@ import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_nnd_spark.nnd import search
 from spark_nnd_spark.nnd.descent import build_graph
 from spark_nnd_spark.nnd.search import _sim, entry_points, graph_search_topk
 from spark_nnd_spark.schemas import InvalidPointsError
@@ -180,6 +182,56 @@ def test_bad_query_vectors_raise(spark, fixture, vecs):
         graph_search_topk(g, q, k=3)
 
 
+def test_query_chunks_change_no_row(spark, fixture, monkeypatch):
+    """Splitting each partition's queries over several walkers (each
+    with its own copy of the partition) returns the one-walker rows."""
+    g, q = fixture
+    one = None
+    for chunks in (1, 3):
+        monkeypatch.setattr(search, "_query_chunks", lambda *a, c=chunks: c)
+        got = _bits(graph_search_topk(g, q, k=5, ef=16, beam=4, n_entry=4))
+        assert one is None or got == one
+        one = got
+
+
+def test_query_chunks_use_idle_cores_while_work_outweighs_copies():
+    part = lambda n, k: type("R", (), {"n": n, "k": k})  # noqa: E731
+    # one partition of 20,000 rows, 4 cores, 320 hop work, K 10
+    assert search._query_chunks([part(20000, 10)], 2000, 320, 4) == 4
+    assert search._query_chunks([part(20000, 10)], 800, 320, 4) == 2
+    assert search._query_chunks([part(20000, 10)], 32, 320, 4) == 1
+    # eight partitions already fill 4 cores
+    assert search._query_chunks([part(2500, 10)] * 8, 2000, 320, 4) == 1
+    assert search._query_chunks([], 32, 320, 4) == 1
+
+
+def test_worker_memory_bound_is_pyspark_memory_per_core():
+    part = type("R", (), {"partition": 0, "n": 1000, "hi": 32, "k": 10})
+    # the walker needs 8 · 1000 · (3 · 32 + 16 · 10) = 2,048,000 bytes
+    search._check_worker_memory([part], {})  # Spark caps no worker
+    search._check_worker_memory([part], {"spark.executor.pyspark.memory": "2m"})
+    with pytest.raises(MemoryError, match="graph partition 0 holds 1000 rows"):
+        search._check_worker_memory([part], {"spark.executor.pyspark.memory": "1m"})
+    with pytest.raises(MemoryError):  # 8m shared by 8 cores
+        search._check_worker_memory(
+            [part],
+            {"spark.executor.pyspark.memory": "8m", "spark.executor.cores": "8"},
+        )
+
+
+def test_oversized_partition_fails_before_the_walk(spark, fixture, monkeypatch):
+    """The memory bound is checked while the search is planned, so an
+    oversized partition raises before any walker is started."""
+    g, q = fixture
+    check = search._check_worker_memory
+    tight = {"spark.executor.pyspark.memory": "1m", "spark.executor.cores": "64"}
+    monkeypatch.setattr(search, "_check_worker_memory", lambda p, c: check(p, tight))
+    with pytest.raises(MemoryError, match="graph partition 0 holds"):
+        graph_search_topk(g, q, k=5)
+    monkeypatch.undo()
+    assert graph_search_topk(g, q, k=5).count() == 5 * q.count()
+
+
 def _find(node, pred):
     """Every node of a JVM physical plan tree that ``pred`` accepts."""
     out = [node] if pred(node) else []
@@ -195,7 +247,8 @@ def test_search_plan_is_one_cogroup_fed_by_one_partition_exchange(
 ):
     """One Arrow cogroup serves the whole batch: no sort-merge join or
     cartesian product anywhere, and the stored rows reach the walkers
-    through exactly one shuffle, keyed by ``partition``."""
+    through exactly one shuffle, keyed by ``partition`` and query
+    chunk."""
     g, q = fixture
     anchors = (  # a stored anchor layer, as the persisted index reads it
         entry_points(g.select("id", "features", "partition"), 8, 3).localCheckpoint()
@@ -217,3 +270,4 @@ def test_search_plan_is_one_cogroup_fed_by_one_partition_exchange(
     shuffles = _find(stored, lambda n: n.nodeName() == "Exchange")
     assert len(shuffles) == 1
     assert "hashpartitioning(partition#" in shuffles[0].toString().split("\n")[0]
+    assert ", chunk#" in shuffles[0].toString().split("\n")[0]
