@@ -9,8 +9,10 @@ Warashina's MapReduce adaptation) on DataFrames. Semantics preserved:
 - per-iteration dataflow B(v) → R(v) → sampled R(v) → A(v) → local join
   → top-K merge with B-preference dedup (NND.scala:117-249);
 - convergence when ``updated ≤ early_termination * K * N``
-  (NND.scala:259-262), with ``updated`` computed as an exact aggregate
-  instead of an accumulator (retry-safe — SURVEY.md §4 defect 1);
+  (NND.scala:259-262), with ``updated`` counted exactly by the
+  iteration's checkpoint job, in its result stage, where Spark applies
+  each partition's count once even when a task is retried — not by a
+  task-side accumulator (SURVEY.md §4 defect 1);
 - ``finished`` rows skipped and returned with null neighbors
   (NND.scala:71,277); left-join result assembly (NND.scala:265-282).
 
@@ -49,7 +51,7 @@ import math
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -317,7 +319,10 @@ def _local_join_block(k: int):
     return kernel
 
 
-def _local_join(adj: DataFrame, feats_iter: DataFrame, k: int, n_blocks: int) -> DataFrame:
+def _local_join(
+    adj: DataFrame, feats_iter: DataFrame, k: int, n_blocks: int,
+    broadcast_pairs: bool = False,
+) -> DataFrame:
     """A11, the local join, for both descent loops: ``adj`` (v, member,
     is_new) raw id rows, duplicates allowed; ``feats_iter`` (member,
     member_features, kth_sim). Groups hash into ``n_blocks`` blocks; the
@@ -325,10 +330,11 @@ def _local_join(adj: DataFrame, feats_iter: DataFrame, k: int, n_blocks: int) ->
     their vectors, and one Arrow call per block scores every group in
     it. Returns the id-only candidate stream (id, nb_id, sim).
 
-    The (block, member) pairs exchange by member, so when ``feats_iter``
-    is already hash-partitioned by member (the dense loop caches it so)
-    the join moves no vector: each vector crosses one exchange, into
-    its blocks."""
+    Each vector crosses one exchange, into its blocks. The dense loop
+    caches ``feats_iter`` hash-partitioned by member, and the (block,
+    member) pairs exchange by member to meet it there. The sparse loop
+    (``broadcast_pairs``) broadcasts the pairs instead: they are
+    O(touched) ids, and its vectors sit in no particular partition."""
     n_parts = _n_parts(adj.sparkSession)
     block = _block_of("v", n_blocks, n_parts)
     # The cogroup's own exchange by block is left to AQE: a small
@@ -336,10 +342,11 @@ def _local_join(adj: DataFrame, feats_iter: DataFrame, k: int, n_blocks: int) ->
     rows = adj.withColumn("block", block)
     # Fresh names on the vector side: both sides derive from one plan,
     # and a cogroup over same-named attributes trips the self-join check.
+    pairs = adj.select(block.alias("fblock"), F.col("member").alias("fmember"))
     pairs = (
-        adj.select(block.alias("fblock"), F.col("member").alias("fmember"))
-        .repartition(n_parts, "fmember")
-        .distinct()
+        F.broadcast(pairs.distinct())
+        if broadcast_pairs
+        else pairs.repartition(n_parts, "fmember").distinct()
     )
     vecs = pairs.join(feats_iter, pairs["fmember"] == feats_iter["member"]).select(
         F.col("fblock").alias("block"), "member", "member_features", "kth_sim"
@@ -399,16 +406,15 @@ def _merge(b_rows: DataFrame, cands: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _kth_sim(rows: DataFrame, k: int) -> DataFrame:
-    """(member, kth_sim): each row's current K-th neighbor similarity,
-    ``-inf`` while its list holds fewer than K — one double per member
+def _kth_sim(k: int):
+    """``kth_sim``: a row's current K-th neighbor similarity, ``-inf``
+    while its list holds fewer than K (or none) — one double per member
     that lets the local join prune candidates which cannot enter the
     top-K."""
-    return rows.select(
-        F.col("id").alias("member"),
+    return (
         F.when(F.size("neighbors") >= k, F.element_at("neighbors", k)["similarity"])
         .otherwise(F.lit(float("-inf")))
-        .alias("kth_sim"),
+        .alias("kth_sim")
     )
 
 
@@ -420,20 +426,33 @@ def _with_kth(feats: DataFrame, kth: DataFrame) -> DataFrame:
     )
 
 
+def _new_entries(col: str = "neighbors"):
+    """A working-schema neighbor array's entries flagged new."""
+    return F.filter(col, lambda n: n["is_new"])
+
+
+def _checkpoint_counting(graph: DataFrame) -> tuple[DataFrame, int]:
+    """``graph`` checkpointed eagerly, with its exact count of new
+    entries. The count is an ``Observation`` on the checkpoint's own
+    job, not a second job: it is gathered in that job's result stage,
+    where Spark applies each partition's update once even when a task
+    is retried, so it is as exact as an aggregate."""
+    obs = Observation()
+    graph = graph.observe(
+        obs, F.coalesce(F.sum(F.size(_new_entries())), F.lit(0)).alias("u")
+    ).localCheckpoint(eager=True)
+    return graph, int(obs.get["u"])
+
+
 def _converged(
-    graph: DataFrame, iteration: int, on_iteration, early_termination: float,
+    updated: int, iteration: int, on_iteration, early_termination: float,
     k: int, threshold_n: int,
 ) -> bool:
-    """A12: the exact count of new entries in ``graph`` (an aggregate,
-    not an accumulator), reported to ``on_iteration``, against the stop
-    rule ``updated ≤ δ·K·N`` (NND.scala:259-262)."""
-    updated = graph.agg(
-        F.coalesce(
-            F.sum(F.size(F.filter("neighbors", lambda n: n["is_new"]))), F.lit(0)
-        ).alias("u")
-    ).first()["u"]
+    """A12: the count of new entries (:func:`_checkpoint_counting`),
+    reported to ``on_iteration``, against the stop rule ``updated ≤
+    δ·K·N`` (NND.scala:259-262)."""
     if on_iteration is not None:
-        on_iteration(iteration, int(updated))
+        on_iteration(iteration, updated)
     return updated <= early_termination * k * threshold_n
 
 
@@ -643,14 +662,16 @@ def _descend(
             F.col("id").alias("v"), F.col("id").alias("member"), F.lit(False).alias("is_new")
         )
         adj = fwd.unionByName(rev).unionByName(self_m)
-        feats_iter = _with_kth(feats, _kth_sim(graph, k))
+        feats_iter = _with_kth(
+            feats, graph.select(F.col("id").alias("member"), _kth_sim(k))
+        )
 
         # A11: local join (numpy, one Arrow call per block) → id-only
         # candidate stream.
         cands = _local_join(adj, feats_iter, k, n_blocks)
-        graph = _merge(graph, cands, k).localCheckpoint(eager=True)
+        graph, updated = _checkpoint_counting(_merge(graph, cands, k))
         iterations_run += 1
-        if _converged(graph, iterations_run, on_iteration, early_termination, k, threshold_n):
+        if _converged(updated, iterations_run, on_iteration, early_termination, k, threshold_n):
             break
     feats.unpersist()
     return graph
@@ -679,7 +700,7 @@ def _out_lists(col: str = "neighbors"):
 
 def _flag_old(col: str = "neighbors"):
     """Output-schema neighbor array lifted into the working schema with
-    every entry old — how untouched prev rows enter the sparse loop."""
+    every entry old — how stored rows enter the sparse loop."""
     return F.transform(
         col,
         lambda s: F.struct(
@@ -690,10 +711,97 @@ def _flag_old(col: str = "neighbors"):
     )
 
 
+def _load(active: DataFrame, prev: DataFrame, ids: DataFrame) -> DataFrame:
+    """Touched-table rows (id, neighbors, prev, partition, features)
+    for the ids in ``ids`` (column ``lid``, duplicates allowed) that
+    have a vector in ``active``: the float32 vector and the partition
+    from ``active``, and the stored list from ``prev`` — kept as
+    ``prev`` (null for a point without one) and, flagged old, as the
+    current list. The stored tables are only scanned: ``ids`` and the
+    ``prev`` rows it selects are the two broadcasts."""
+    ids = F.broadcast(ids)
+    pts = active.join(ids, F.col("id") == F.col("lid"), "left_semi")
+    old = prev.join(ids, F.col("id") == F.col("lid"), "left_semi")
+    return pts.join(
+        F.broadcast(old.select("id", F.col("neighbors").alias("prev"))), "id", "left"
+    ).select(
+        "id", _flag_old("prev").alias("neighbors"), "prev", "partition",
+        F.col("features").cast("array<float>").alias("features"),
+    )
+
+
+def _next_touched(u: DataFrame, cands: DataFrame, k: int) -> tuple[DataFrame, int]:
+    """A7/A12 merge of one sparse round: every row of the touched rows
+    ``u`` merged with the candidate stream — a row that received none
+    keeps its list with its flags cleared, since its list is in merge
+    order — then joined back to its vector, partition and stored list.
+    Only (id, nb_id, sim) rows cross the merge's exchange; the rest of
+    ``u`` is broadcast into the join. Checkpointed, with its count of
+    new entries (:func:`_checkpoint_counting`)."""
+    merged = _merge(u.select("id", "neighbors"), cands, k)
+    return _checkpoint_counting(merged.join(F.broadcast(u.drop("neighbors")), "id"))
+
+
+def _live_groups(
+    t: DataFrame, prev: DataFrame, reverse: DataFrame, sample_rate: float,
+    seed: int, iteration: int,
+) -> DataFrame:
+    """A8–A10 of one sparse round, read from the touched table ``t``:
+    the live groups' raw (v, member, is_new) rows, checkpointed, each
+    flagged ``fresh`` when its member is not yet a row of ``t``.
+
+    Live groups are ``t``'s rows holding a new entry and the targets of
+    those entries: a group A(v) gains a new member only through v's own
+    list or a reverse edge from such a row. B(v) is ``t``'s list, or the
+    stored one for a live id ``t`` lacks; R(v) is ``t``'s edges into live
+    targets plus the stored ``reverse`` pairs of sources ``t`` lacks.
+    The live ids and ``t``'s ids are the two broadcasts."""
+    new = _new_entries()
+    live = t.filter(F.size(new) > 0).select(F.col("id").alias("lid")).unionByName(
+        t.select(F.explode(F.transform(new, lambda n: n["id"])).alias("lid"))
+    )
+    tid = F.broadcast(t.select(F.col("id").alias("tid")))
+    is_live = F.col("id") == F.col("lid")
+    own = t.select("id", "neighbors").join(F.broadcast(live), is_live, "left_semi")
+    stored = (
+        prev.join(F.broadcast(live), is_live, "left_semi")
+        .join(tid, F.col("id") == F.col("tid"), "left_anti")
+        .select("id", _flag_old().alias("neighbors"))
+    )
+    fwd = own.unionByName(stored).select(
+        F.col("id").alias("v"), F.explode("neighbors").alias("nb")
+    ).select("v", F.col("nb.id").alias("member"), F.col("nb.is_new").alias("is_new"))
+    rev_t = t.select(
+        F.col("id").alias("member"), F.explode("neighbors").alias("nb")
+    ).select(
+        F.col("nb.id").alias("v"), "member", F.col("nb.is_new").alias("is_new")
+    ).join(F.broadcast(live), F.col("v") == F.col("lid"), "left_semi")
+    rev_s = (
+        reverse.join(F.broadcast(live), is_live, "left_semi")
+        .join(tid, F.col("src") == F.col("tid"), "left_anti")
+        .select(
+            F.col("id").alias("v"), F.col("src").alias("member"),
+            F.lit(False).alias("is_new"),
+        )
+    )
+    self_m = live.select(
+        F.col("lid").alias("v"), F.col("lid").alias("member"), F.lit(False).alias("is_new")
+    )
+    adj = fwd.unionByName(
+        _sample_reverse(rev_t.unionByName(rev_s), sample_rate, seed, iteration)
+    ).unionByName(self_m)
+    return (
+        adj.join(tid, F.col("member") == F.col("tid"), "left")
+        .select("v", "member", "is_new", F.col("tid").isNull().alias("fresh"))
+        .localCheckpoint(eager=True)
+    )
+
+
 def _descend_sparse(
     active: DataFrame,
     prev: DataFrame,
-    hot: DataFrame,
+    reverse: DataFrame,
+    cands: DataFrame,
     k: int,
     max_iterations: int,
     early_termination: float,
@@ -702,162 +810,57 @@ def _descend_sparse(
     threshold_n: int,
     n_blocks: int,
     on_iteration=None,
-    reverse: DataFrame | None = None,
 ) -> DataFrame:
-    """The NN-Descent loop for INCREMENTAL updates, restructured so
-    every exchange is bounded by the touched neighborhood, never the
-    corpus (the r14 extend-shuffle finding: the old path exploded the
-    full graph into O(N·K) edge rows per iteration before pruning).
+    """The NN-Descent loop for INCREMENTAL updates, from the
+    checkpointed init candidates ``cands``, whose receiving rows seed
+    one checkpointed table of touched rows
+    T = (id, neighbors, prev, partition, features): the working list,
+    the stored list ``prev`` (null for a new point), the partition and
+    the float32 vector of every row the update has read so far. The
+    working graph is T's list inside T and ``prev``'s outside; ``prev``
+    and the ``reverse`` pairs of its edges (id = target, src) are only
+    scanned, never exploded, joined or materialized at corpus size.
 
-    State split: ``prev`` (id, neighbors in OUTPUT schema) holds the
-    prior graph and is only ever scanned — broadcast semi/anti joins,
-    no shuffle; ``hot`` (WORKING schema, checkpointed) holds exactly
-    the rows touched so far. The working graph is ``prev`` outside
-    ``hot``'s ids, ``hot`` inside.
+    Per round, row for row what the dense loop with inert groups
+    pruned would do (same groups, same candidates, same merge order),
+    in three checkpoints, so each stored table is scanned once:
 
-    Per iteration, equal row-for-row to running the dense loop with
-    inert-group pruning (same groups run, same candidates, same
-    merge ranking):
+    - the live groups' raw rows, read from T and, for what T lacks, the
+      stored tables (:func:`_live_groups`);
+    - the rows of the members T lacks (:func:`_load`, one broadcast of
+      their ids);
+    - the next T: every member's vector and K-th similarity come from
+      T and those rows, and the local join (:func:`_local_join`) and
+      the merge (:func:`_next_touched`) run over them; the
+      checkpoint's job also counts the new entries for the stop rule.
 
-    - live targets = dirty hot rows ∪ targets of their new edges —
-      derivable from ``hot`` alone, because a group A(v) can contain a
-      new member only via v's own list (v dirty) or via a reverse edge
-      from a dirty source;
-    - B(v)/kth/old-edge lookups semi-join ``prev``∪``hot`` on small
-      broadcast id sets;
-    - R(v) comes from ``reverse`` pairs of the prev graph (id=target,
-      src=source) — the persisted index passes its maintained sidecar
-      so the prev adjacency is never exploded, not even map-side —
-      with sources superseded by ``hot`` re-derived from ``hot``;
-    - only candidate-receiving rows re-merge; dirty-but-unmerged rows
-      settle (flags clear, lists untouched) exactly as a dense merge
-      of their own old edges would leave them.
-
-    Shuffle per iteration: O(touched·K̄) id rows + O(members·dim)
-    feature rows + the O(affected·K) merge — all batch-bounded.
-    """
-    feats_all = active.select(
-        F.col("id").alias("member"),
-        F.col("features").cast("array<float>").alias("member_features"),
+    Rows T holds but no round touches keep their stored list: T's lists
+    are in merge order, so the merge returns them unchanged with their
+    flags cleared. Every exchange is O(touched): id rows, the members'
+    vectors into their blocks, and the id-only merge. Returns the last
+    T."""
+    t, _ = _next_touched(
+        _load(active, prev, cands.select(F.col("id").alias("lid"))), cands, k
     )
-    if reverse is None:
-        # map-side explode of prev (no shuffle); callers with a
-        # persisted sidecar skip even this scan-time explode
-        reverse = prev.select(
-            F.col("id").alias("src"), F.explode("neighbors").alias("nb")
-        ).select(F.col("nb.id").alias("id"), "src")
-    reverse = reverse.select("id", "src")
-
-    iterations_run = 0
-    for _ in range(max_iterations):
-        hot_ids = hot.select("id")
-        hot_ids_b = F.broadcast(hot_ids)
-        hot_src_b = F.broadcast(hot.select(F.col("id").alias("src")))
-
-        def work_rows(ids: DataFrame, hot=hot, hot_ids_b=hot_ids_b) -> DataFrame:
-            """Current working rows (WORK schema) for a small id set:
-            prev outside hot, hot inside — two broadcast joins, no
-            shuffle of either big side. ``ids`` MUST already be
-            distinct (every caller passes a distinct().localCheckpoint
-            id set) — re-deduping here paid a full exchange over the
-            O(touched) id set inside each broadcast subtree, three
-            times per iteration (the r15 per-stage diagnosis: 13
-            identical O(touched)-row sub-jobs dominated extend
-            shuffle)."""
-            ids_b = F.broadcast(
-                ids.select(F.col(ids.columns[0]).alias("id"))
-            )
-            stable = (
-                prev.join(hot_ids_b, "id", "left_anti")
-                .join(ids_b, "id", "left_semi")
-                .select("id", _flag_old().alias("neighbors"))
-            )
-            return stable.unionByName(
-                hot.join(ids_b, "id", "left_semi").select("id", "neighbors")
-            )
-
-        dirty = hot.filter(F.exists("neighbors", lambda n: n["is_new"]))
-        new_tgt = (
-            dirty.select(F.explode("neighbors").alias("nb"))
-            .filter(F.col("nb.is_new"))
-            .select(F.col("nb.id").alias("v"))
+    for iteration in range(max_iterations):
+        adj = _live_groups(t, prev, reverse, sample_rate, seed, iteration)
+        # members T lacks join it, read once from the stored tables;
+        # every member's vector and K-th similarity then come from T
+        fresh = adj.filter("fresh").select(F.col("member").alias("lid"))
+        u = t.unionByName(_load(active, prev, fresh).localCheckpoint(eager=True))
+        feats_iter = u.select(
+            F.col("id").alias("member"), F.col("features").alias("member_features"),
+            _kth_sim(k),
         )
-        live_v = (
-            dirty.select(F.col("id").alias("v"))
-            .unionByName(new_tgt)
-            .distinct()
-            .localCheckpoint(eager=True)
+        cands = _local_join(
+            adj.drop("fresh"), feats_iter, k, n_blocks, broadcast_pairs=True
         )
-        live_b = F.broadcast(live_v)
-
-        # A10 over live groups only. B(v): the live rows' own lists.
-        fwd = (
-            work_rows(live_v)
-            .select(F.col("id").alias("v"), F.explode("neighbors").alias("nb"))
-            .select(
-                "v", F.col("nb.id").alias("member"),
-                F.col("nb.is_new").alias("is_new"),
-            )
-        )
-        # R(v): prev-graph pairs (sidecar) for un-superseded sources,
-        # hot rows' edges re-derived; semi-join to live targets first.
-        rev_stable = (
-            reverse.join(F.broadcast(live_v.select(F.col("v").alias("id"))), "id", "left_semi")
-            .join(hot_src_b, "src", "left_anti")
-            .select(
-                F.col("id").alias("v"), F.col("src").alias("member"),
-                F.lit(False).alias("is_new"),
-            )
-        )
-        rev_hot = (
-            hot.select(F.col("id").alias("src"), F.explode("neighbors").alias("nb"))
-            .select(
-                F.col("nb.id").alias("v"), F.col("src").alias("member"),
-                F.col("nb.is_new").alias("is_new"),
-            )
-            .join(live_b, "v", "left_semi")
-        )
-        rev = _sample_reverse(
-            rev_stable.unionByName(rev_hot), sample_rate, seed, iterations_run
-        )
-        self_m = live_v.select(
-            "v", F.col("v").alias("member"), F.lit(False).alias("is_new")
-        )
-        adj = fwd.unionByName(rev).unionByName(self_m)
-        member_ids = (
-            adj.select(F.col("member").alias("id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        feats_iter = _with_kth(
-            feats_all.join(
-                F.broadcast(member_ids.select(F.col("id").alias("member"))),
-                "member",
-                "left_semi",
-            ),
-            _kth_sim(work_rows(member_ids), k),
-        )
-
-        # A11 over live groups; checkpoint — the stream is read twice
-        # (affected ids + merge input) and is O(touched·K) small.
-        cands = _local_join(adj, feats_iter, k, n_blocks).localCheckpoint(eager=True)
-        affected = cands.select("id").distinct().localCheckpoint(eager=True)
-        aff_b = F.broadcast(affected)
-
-        merged = _merge(work_rows(affected), cands, k)
-        # Dirty rows that received no candidates settle: a dense merge
-        # of just their own old edges returns the identical list with
-        # flags cleared, so clear them in place without a shuffle.
-        settled = hot.join(aff_b, "id", "left_anti").select(
-            "id", _flag_old().alias("neighbors")
-        )
-        hot = merged.unionByName(settled).localCheckpoint(eager=True)
-        iterations_run += 1
-        # A12: only hot rows can carry new flags — same count the dense
-        # loop's full aggregate would produce.
-        if _converged(hot, iterations_run, on_iteration, early_termination, k, threshold_n):
+        t, updated = _next_touched(u, cands, k)
+        if _converged(
+            updated, iteration + 1, on_iteration, early_termination, k, threshold_n
+        ):
             break
-    return hot
+    return t
 
 
 def update_graph(
@@ -937,15 +940,19 @@ def update_graph_delta(
     candidate-receivers' neighbor groups; corpus-independent once the
     corpus exceeds that bound — never with the corpus itself):
 
-    - init: only new points' bucket cohorts run the init kernel, and
-      only candidate-receiving rows are merged into the working set
-      (bucket membership is a pure function of the feature hash, so
-      old members land in the buckets they did at build time);
-    - iterations run :func:`_descend_sparse` — the prev graph is never
-      exploded or re-merged; untouched rows pass through by identity;
+    - init: only new points' bucket cohorts run the init kernel (bucket
+      membership is a pure function of the feature hash, so old members
+      land in the buckets they did at build time), and the
+      candidate-receiving rows seed the touched table;
+    - iterations run :func:`_descend_sparse` over that table — the prev
+      graph is never exploded or re-merged, and rows it never touches
+      are never read;
     - convergence denominator is the NEW-point count (``updated ≤
       δ·K·N_new``), since a converged bulk would otherwise mask new
-      points' churn.
+      points' churn;
+    - the result is a projection of the last touched table, which
+      carries each row's stored list and partition: no join back to
+      ``prev`` or to the points.
 
     ``new_ids`` (optional) skips the new-arrival anti-join when the
     caller already knows the batch ids (the persisted index's extend,
@@ -959,6 +966,12 @@ def update_graph_delta(
         "id", "features", "partition"
     )
     prev_nb = prev.select("id", "neighbors")
+    if reverse is None:
+        # map-side explode of prev (no shuffle); callers with a
+        # persisted sidecar skip even this scan-time explode
+        reverse = prev_nb.select(
+            F.col("id").alias("src"), F.explode("neighbors").alias("nb")
+        ).select(F.col("nb.id").alias("id"), "src")
     if new_ids is None:
         new_ids = (
             active.select("id").join(prev_nb.select("id"), "id", "left_anti")
@@ -986,43 +999,20 @@ def update_graph_delta(
     init_cands = _init_cands(members, seed, k, n_blocks)
     # Drop candidates where both endpoints are old (their graph entries
     # are already converged; re-initializing them would only add noise).
-    new_flag = F.broadcast(new_ids.withColumn("__new", F.lit(True)))
+    new_b = F.broadcast(new_ids.select(F.col("id").alias("nid")))
     init_cands = (
-        init_cands.join(new_flag, "id", "left")
-        .withColumnRenamed("__new", "__new_id")
-        .join(new_flag.withColumnRenamed("id", "nb_id"), "nb_id", "left")
-        .filter(F.col("__new_id").isNotNull() | F.col("__new").isNotNull())
+        init_cands.join(new_b, F.col("id") == F.col("nid"), "left")
+        .withColumnRenamed("nid", "__new_id")
+        .join(new_b, F.col("nb_id") == F.col("nid"), "left")
+        .filter(F.col("__new_id").isNotNull() | F.col("nid").isNotNull())
         .select("id", "nb_id", "sim")
         .localCheckpoint(eager=True)
     )
-
-    # Seed hot = merge of ONLY the candidate-receiving rows' prev edges
-    # with the init candidates; everything else stays in prev untouched.
-    affected0 = init_cands.select("id").distinct()
-    hot0 = _merge(
-        prev_nb.join(F.broadcast(affected0), "id", "left_semi"), init_cands, k
-    ).localCheckpoint(eager=True)
-    hot = _descend_sparse(
-        active, prev_nb, hot0, k, max_iterations, early_termination,
-        sample_rate, seed, n_new, n_blocks, on_iteration, reverse=reverse,
+    t = _descend_sparse(
+        active, prev_nb, reverse.select("id", "src"), init_cands, k,
+        max_iterations, early_termination, sample_rate, seed, n_new, n_blocks,
+        on_iteration,
     )
-
-    hot_clean = hot.select("id", _out_lists().alias("neighbors"))
-    prev_touched = prev_nb.join(
-        F.broadcast(hot.select("id")), "id", "left_semi"
-    ).select("id", F.col("neighbors").alias("__old"))
-    # checkpoint the diff before attaching partitions: the partition
-    # lookup broadcasts changed ids and the final join reads changed
-    # again — without the checkpoint both consumers re-ran the whole
-    # hot-vs-prev comparison subtree (once inside the broadcast thread)
-    changed = (
-        hot_clean.join(prev_touched, "id", "left")
-        .filter(F.col("__old").isNull() | (F.col("neighbors") != F.col("__old")))
-        .select("id", "neighbors")
-    ).localCheckpoint(eager=True)
-    part = points.select("id", "partition").join(
-        F.broadcast(changed.select("id")), "id", "left_semi"
-    )
-    return changed.join(F.broadcast(part), "id").select(
-        "id", "neighbors", "partition"
-    )
+    return t.filter(
+        F.col("prev").isNull() | (_out_lists() != F.col("prev"))
+    ).select("id", _out_lists().alias("neighbors"), "partition")

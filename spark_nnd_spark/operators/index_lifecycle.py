@@ -21,10 +21,9 @@ The lifecycle each family exposes is build → probe → extend → RETRACT
 
 Scale: retraction is an O(retracted) append; probes pay one broadcast
 anti-join per index table they scan; compaction is the only O(index)
-rewrite and runs on the operator's schedule, not the ingest path. A
-100 TB deployment would write each rewrite to a new versioned dir and
-swap by rename instead of the eager-localCheckpoint + overwrite used
-here (same convergence argument either way).
+rewrite and runs on the operator's schedule, not the ingest path.
+Rewrites detach from the files they replace with an eager
+localCheckpoint, then overwrite them in place.
 
 Tombstone existence is a local-filesystem check (this repo's indexes
 are local dirs); an HDFS/S3 deployment swaps in FileSystem.exists —
@@ -41,6 +40,16 @@ from pyspark.sql import functions as F
 
 # (table subdir, id column in that table, hive partition column or None)
 TableSpec = tuple[str, str, str | None]
+
+
+def read_table(spark, path: str, table: str, schemas: dict | None = None) -> DataFrame:
+    """``{path}/{table}``, read with its fixed schema when ``schemas``
+    holds one for the table: Spark then runs no schema-inference job
+    over the files."""
+    reader = spark.read
+    if schemas and table in schemas:
+        reader = reader.schema(schemas[table])
+    return reader.parquet(f"{path}/{table}")
 
 
 def read_tombstones(spark, path: str) -> DataFrame | None:
@@ -71,13 +80,16 @@ def anti_tombstones(df: DataFrame, tomb: DataFrame | None, id_col: str) -> DataF
     )
 
 
-def rewrite_minus(spark, path: str, ids: DataFrame, tables: list[TableSpec]) -> None:
+def rewrite_minus(
+    spark, path: str, ids: DataFrame, tables: list[TableSpec], schemas: dict | None = None
+) -> None:
     """Rewrite the given index tables without ``ids`` (one-column 'id'
     DataFrame) — the physical-delete kernel shared by compact (all
     tombstones) and the re-admission upsert in extend (just the
     overlap). Each rewrite is an idempotent anti-join; the eager
     localCheckpoints detach ids and each table from the files being
-    overwritten."""
+    overwritten. ``schemas`` (optional) fixes the tables' read schemas
+    (:func:`read_table`)."""
     ids = ids.localCheckpoint(eager=True)  # survives any dir's rewrite
     for spec in tables:
         tbl, tbl_id, part = spec[0], spec[1], spec[2]
@@ -86,7 +98,7 @@ def rewrite_minus(spark, path: str, ids: DataFrame, tables: list[TableSpec]) -> 
         # postings are token-sorted for row-group pruning; a rewrite
         # must not flatten that)
         layout = spec[3] if len(spec) > 3 else None
-        cur = spark.read.parquet(f"{path}/{tbl}")
+        cur = read_table(spark, path, tbl, schemas)
         kept = cur.join(
             F.broadcast(ids.select(F.col("id").alias(tbl_id))), tbl_id, "left_anti"
         ).localCheckpoint(eager=True)
@@ -119,6 +131,7 @@ def settle_upsert(
     new_ids: DataFrame,
     tables: list[TableSpec],
     roster: TableSpec | None = None,
+    schemas: dict | None = None,
 ) -> None:
     """The FULL upsert half of extend: settle tombstoned overlap
     (purge + clear tombstones, :func:`settle_readmission`), then purge
@@ -134,23 +147,27 @@ def settle_upsert(
     fps, BM25) pass a doc-grain roster explicitly so the common
     no-overlap path reads O(docs) rows, never O(postings). The purge
     itself (rare path: only when an actual duplicate arrives) is the
-    shared targeted rewrite over all tables."""
-    settle_readmission(spark, path, new_ids, tables)
+    shared targeted rewrite over all tables. ``schemas`` (optional)
+    fixes the tables' read schemas (:func:`read_table`)."""
+    settle_readmission(spark, path, new_ids, tables, schemas)
     r = roster if roster is not None else tables[0]
-    ids = new_ids.select(F.col(new_ids.columns[0]).alias("id")).distinct()
+    ids = new_ids.select(F.col(new_ids.columns[0]).alias("id"))
     live = (
-        spark.read.parquet(f"{path}/{r[0]}")
+        read_table(spark, path, r[0], schemas)
         .select(F.col(r[1]).alias("id"))
         .join(F.broadcast(ids), "id", "left_semi")
-        .distinct()
-        .localCheckpoint(eager=True)
     )
-    if live.take(1):
-        rewrite_minus(spark, path, live, tables)
+    # one job scans the whole roster (a bare take(1) would rescan it in
+    # growing rounds when nothing matches); rewrite_minus detaches the
+    # ids from the files it rewrites, and duplicates are harmless to its
+    # anti-joins
+    if live.coalesce(1).take(1):
+        rewrite_minus(spark, path, live, tables, schemas)
 
 
 def settle_readmission(
-    spark, path: str, new_ids: DataFrame, tables: list[TableSpec]
+    spark, path: str, new_ids: DataFrame, tables: list[TableSpec],
+    schemas: dict | None = None,
 ) -> None:
     """The upsert half of extend: purge the physical rows of any
     incoming ids that are tombstoned, then clear their tombstones
@@ -163,7 +180,7 @@ def settle_readmission(
     readmitted = tomb.join(F.broadcast(new_ids), "id", "left_semi")
     if readmitted.isEmpty():
         return
-    rewrite_minus(spark, path, readmitted, tables)
+    rewrite_minus(spark, path, readmitted, tables, schemas)
     remaining = tomb.join(F.broadcast(new_ids), "id", "left_anti").localCheckpoint(
         eager=True
     )

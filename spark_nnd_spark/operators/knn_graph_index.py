@@ -31,15 +31,16 @@ Layout under ``{path}``:
 - ``tombstones/`` the shared O(retracted) delete log
   (operators/index_lifecycle).
 
-Scale contract (100 TB):
+What each operation costs:
 
-- **extend is O(batch) in compute, shuffle, AND write**:
+- **extend reads and writes O(batch neighborhood)**:
   ``update_graph_delta`` (nnd/descent) bounds every exchange to the
-  new batch's neighborhood — the stored graph is scanned, never
+  rows the batch touches — the stored graph is scanned, never
   exploded, joined, or materialized at corpus size, and reverse
   expansion reads the maintained sidecar; the delta write covers only
   rows whose neighbor list actually changed — the base adjacency is
-  never rewritten on ingest.
+  never rewritten on ingest. Its Spark job count is fixed per update
+  hop (tests/test_sparse_descent.py holds each hop to a budget).
 - **read pays O(updated), not O(graph)**: resolution is base
   anti-join broadcast(update ids) ∪ latest-per-id over the UPDATES
   table alone — no corpus-sized window. Tombstones mask rows via the
@@ -51,6 +52,9 @@ Scale contract (100 TB):
   physically prune tombstoned ids from rows AND neighbor lists,
   clear both logs (tombstones dropped LAST, so a crashed compaction
   stays correct and a retry converges).
+
+Every table is read with its fixed schema (``_SCHEMAS``), so no read
+runs a schema-inference job.
 """
 
 from __future__ import annotations
@@ -67,6 +71,24 @@ from spark_nnd_spark.operators import index_lifecycle as IL
 from spark_nnd_spark.schemas import normalize_points, validate_points
 
 _NEIGHBOR_T = "array<struct<id bigint, similarity double>>"
+
+# The tables' fixed read schemas (hive partition column last, as Spark
+# places it).
+_SCHEMAS = {
+    "points": "id bigint, features array<double>, label bigint, finished boolean, "
+    "partition bigint",
+    "adjacency": f"id bigint, neighbors {_NEIGHBOR_T}, partition bigint",
+    "reverse": "id bigint, src bigint, partition bigint",
+    "anchors": "id bigint, features array<double>, partition bigint",
+    "updates": f"id bigint, neighbors {_NEIGHBOR_T}, partition bigint, batch bigint",
+    "meta": "k bigint, max_iterations bigint, early_termination double, "
+    "sample_rate double, buckets_per_instance bigint, seed bigint",
+}
+
+
+def _read(spark: SparkSession, path: str, table: str) -> DataFrame:
+    return IL.read_table(spark, path, table, _SCHEMAS)
+
 
 # Upsert/purge table specs (id column, partition column). ``reverse`` is
 # keyed by ``src``: an upserted id's OLD out-edges must leave the sidecar
@@ -138,7 +160,12 @@ def persist_graph_index(
     build configuration; they must be the ones the graph was built
     with."""
     spark = graph.sparkSession
-    g = graph.localCheckpoint(eager=True)
+    # stored in the types of ``_SCHEMAS``, which every read assumes
+    g = graph.select(
+        F.col("id").cast("bigint"), F.col("features").cast("array<double>"),
+        F.col("label").cast("bigint"), F.col("finished").cast("boolean"),
+        F.col("partition").cast("bigint"), F.col("neighbors").cast(_NEIGHBOR_T),
+    ).localCheckpoint(eager=True)
     g.select("id", "features", "label", "finished", "partition").write.mode(
         "overwrite"
     ).partitionBy("partition").parquet(f"{path}/points")
@@ -148,12 +175,12 @@ def persist_graph_index(
     adj.write.mode("overwrite").partitionBy("partition").parquet(
         f"{path}/adjacency"
     )
-    _write_reverse(spark.read.parquet(f"{path}/adjacency"), path)
+    _write_reverse(_read(spark, path, "adjacency"), path)
     # coarse entry layer (the HNSW-upper-layer move): searches opting in
     # (use_anchors) seed from each query's NEAREST anchors instead of
     # shared random entries — recall at small n_entry
     entry_points(
-        spark.read.parquet(f"{path}/points"), int(n_anchors), int(seed)
+        _read(spark, path, "points"), int(n_anchors), int(seed)
     ).write.mode("overwrite").partitionBy("partition").parquet(f"{path}/anchors")
     spark.createDataFrame(
         [(
@@ -166,7 +193,7 @@ def persist_graph_index(
 
 
 def _meta(spark: SparkSession, path: str) -> dict[str, Any]:
-    return spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+    return _read(spark, path, "meta").collect()[0].asDict()
 
 
 def _rev_pairs(adj: DataFrame) -> DataFrame:
@@ -199,7 +226,7 @@ def _latest_updates(spark: SparkSession, path: str) -> DataFrame:
     the batch number is exactly latest-per-id; batches are distinct
     per extend append, so no tie exists (and a same-batch tie would
     have been nondeterministic under the window too)."""
-    upd = spark.read.parquet(f"{path}/updates")
+    upd = _read(spark, path, "updates")
     return (
         upd.groupBy("id")
         .agg(
@@ -220,7 +247,7 @@ def _resolved_reverse(
     delta rows are exploded at read time. ``latest`` lets a caller
     that already resolved the deltas (the extend) share ONE
     resolution instead of paying it per view."""
-    base = spark.read.parquet(f"{path}/reverse").select("id", "src")
+    base = _read(spark, path, "reverse").select("id", "src")
     if not _exists(spark, f"{path}/updates"):
         return base
     if latest is None:
@@ -240,7 +267,7 @@ def _resolved_adjacency(
     has no delta, plus the latest delta per updated id. The only
     exchange is the latest-per-id aggregate over the UPDATES table
     (_latest_updates); the base side pays one broadcast anti-join."""
-    base = spark.read.parquet(f"{path}/adjacency")
+    base = _read(spark, path, "adjacency")
     if not _exists(spark, f"{path}/updates"):
         return base
     if latest is None:
@@ -260,7 +287,7 @@ def read_graph(spark: SparkSession, path: str) -> DataFrame:
     lists run :func:`compact_knn_graph_index` first (or explode-filter
     themselves)."""
     tomb = IL.read_tombstones(spark, path)
-    pts = IL.anti_tombstones(spark.read.parquet(f"{path}/points"), tomb, "id")
+    pts = IL.anti_tombstones(_read(spark, path, "points"), tomb, "id")
     adj = IL.anti_tombstones(_resolved_adjacency(spark, path), tomb, "id")
     return pts.join(adj.select("id", "neighbors"), "id", "left").select(
         "id", "features", "label", "partition", "finished",
@@ -301,7 +328,7 @@ def graph_index_search(
     row of the masked graph, so a retracted or excluded anchor can
     neither seed nor surface."""
     g = read_graph(spark, path)
-    anchors = spark.read.parquet(f"{path}/anchors").select("id") if use_anchors else None
+    anchors = _read(spark, path, "anchors").select("id") if use_anchors else None
     if exclude_ids is not None:
         ex = F.broadcast(
             exclude_ids.select(
@@ -335,14 +362,21 @@ def extend_knn_graph_index(
     anywhere in the job. Reverse expansion during the update reads the
     maintained sidecar, so even the scan-time explode is skipped.
 
-    The honest size of "neighborhood" (measured per-stage, r15): the
-    batch's bucket cohorts receive candidates, and each descent hop
-    activates the receivers' neighbor groups, so the touched set —
-    and with it extend shuffle — is O(min(corpus,
-    batch·draws·bucket_size·K̄)). Corpus-independence holds once the
-    corpus exceeds that bound (BENCH_GRAPH_INDEX's tiny-batch sweep
-    is the in-bound measurement; the larger batches saturate the
-    test corpora and track min(corpus, ·)).
+    The size of "neighborhood" (measured per stage): the batch's bucket
+    cohorts receive candidates, and each descent hop activates the
+    receivers' neighbor groups, so the touched set — and with it extend
+    shuffle — is O(min(corpus, batch·draws·bucket_size·K̄)).
+    Corpus-independence holds once the corpus exceeds that bound
+    (BENCH_GRAPH_INDEX's tiny-batch sweep is the in-bound measurement;
+    the larger batches saturate the test corpora and track
+    min(corpus, ·)).
+
+    The update keeps the rows it touches in one checkpointed table, so
+    each hop costs a fixed number of Spark jobs (13 on the nndbench
+    index), and the delta it returns is a projection of that table,
+    written without a further join. Pending deltas and tombstones add their resolution
+    (the latest delta per id, the tombstone ids) to the stored views
+    the update scans; both are checkpointed once per extend.
 
     Re-admission of tombstoned ids is the standard upsert
     (index_lifecycle.settle_readmission: purge old physical rows,
@@ -364,13 +398,15 @@ def extend_knn_graph_index(
         tables.append(("updates", "id", None))
     IL.settle_upsert(
         spark, path, new_pts.select("id"), tables,
-        roster=("points", "id", "partition"),
+        roster=("points", "id", "partition"), schemas=_SCHEMAS,
     )
 
     # Lazy, tombstone-masked views pinned AFTER the upsert and BEFORE
     # any append — file listings are fixed at read creation, so the
     # update's scans never see this batch's own writes.
     tomb = IL.read_tombstones(spark, path)
+    if tomb is not None:  # read by every hop: resolve it once
+        tomb = tomb.localCheckpoint(eager=True)
     latest = (
         _latest_updates(spark, path)
         if _exists(spark, f"{path}/updates")
@@ -379,9 +415,7 @@ def extend_knn_graph_index(
     prev_adj = IL.anti_tombstones(
         _resolved_adjacency(spark, path, latest), tomb, "id"
     ).select("id", "neighbors")
-    prev_pts = IL.anti_tombstones(
-        spark.read.parquet(f"{path}/points"), tomb, "id"
-    )
+    prev_pts = IL.anti_tombstones(_read(spark, path, "points"), tomb, "id")
     rev = IL.anti_tombstones(
         _resolved_reverse(spark, path, latest), tomb, "src"
     )
@@ -393,8 +427,7 @@ def extend_knn_graph_index(
 
     m = _meta(spark, path)
     # Delta = rows whose neighbor list changed (new ids have no prev
-    # row). Struct-array equality is exact — no float normalization
-    # needed, both sides carry the kernel's float64 sims.
+    # row), a projection of the update's last checkpoint.
     changed = update_graph_delta(
         prev_adj,
         all_pts,
@@ -406,13 +439,13 @@ def extend_knn_graph_index(
         seed=int(m["seed"]),
         new_ids=new_pts.select("id"),
         reverse=rev,
-    ).localCheckpoint(eager=True)
+    )
 
     batch_no = 0
     if _exists(spark, f"{path}/updates"):
         # the overlap purge above may have emptied the table → max None
         prev_max = (
-            spark.read.parquet(f"{path}/updates")
+            _read(spark, path, "updates")
             .agg(F.max("batch"))
             .collect()[0][0]
         )
@@ -444,7 +477,7 @@ def compact_knn_graph_index(spark: SparkSession, path: str) -> None:
     converges)."""
     tomb = IL.read_tombstones(spark, path)
     adj = _resolved_adjacency(spark, path)
-    pts = spark.read.parquet(f"{path}/points")
+    pts = _read(spark, path, "points")
     if tomb is not None:
         adj = IL.anti_tombstones(adj, tomb, "id")
         pts = IL.anti_tombstones(pts, tomb, "id")
@@ -507,10 +540,10 @@ def compact_knn_graph_index(spark: SparkSession, path: str) -> None:
     )
     # reverse sidecar rebuilt from the compacted adjacency — pruned
     # lists mean pruned pairs; zero-tax reverse reads are restored
-    _write_reverse(spark.read.parquet(f"{path}/adjacency"), path)
+    _write_reverse(_read(spark, path, "adjacency"), path)
     if tomb is not None:
         anchors = IL.anti_tombstones(
-            spark.read.parquet(f"{path}/anchors"), tomb, "id"
+            _read(spark, path, "anchors"), tomb, "id"
         ).localCheckpoint(eager=True)
         anchors.write.mode("overwrite").partitionBy("partition").parquet(
             f"{path}/anchors"
