@@ -332,9 +332,9 @@ def _local_join(
 
     Each vector crosses one exchange, into its blocks. The dense loop
     caches ``feats_iter`` hash-partitioned by member, and the (block,
-    member) pairs exchange by member to meet it there. The sparse loop
-    (``broadcast_pairs``) broadcasts the pairs instead: they are
-    O(touched) ids, and its vectors sit in no particular partition."""
+    member) pairs exchange by member to meet it there. The sparse loop,
+    whose vectors sit in no particular partition, broadcasts its
+    O(touched) pairs instead (``broadcast_pairs``) while they are small."""
     n_parts = _n_parts(adj.sparkSession)
     block = _block_of("v", n_blocks, n_parts)
     # The cogroup's own exchange by block is left to AQE: a small
@@ -366,11 +366,8 @@ def _merge_top_k(edges: DataFrame, k: int) -> DataFrame:
     the up-front repartition by ``id`` satisfies the (id, nb_id)
     dedup's clustering (HashPartitioning on a subset of the grouping
     keys co-locates every group), the rank window's id partitioning,
-    AND the trailing groupBy(id) — before r15 the same stream was
-    exchanged twice, once per keying (§2.4 of the optimization guide:
-    operations keyed compatibly should share one exchange). The
-    exchanged stream is the O(N·K̄) id-only candidate edges — the
-    merge never ships features.
+    AND the trailing groupBy(id). The exchanged stream is the O(N·K̄)
+    id-only candidate edges — the merge never ships features.
     """
     dedup = edges.repartition("id").groupBy("id", "nb_id").agg(
         F.max("is_b").alias("is_b"),
@@ -431,17 +428,34 @@ def _new_entries(col: str = "neighbors"):
     return F.filter(col, lambda n: n["is_new"])
 
 
+def _checkpoint_observing(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """``df`` checkpointed eagerly, with the aggregates ``aggs`` (name →
+    column, 0 over no rows). They are an ``Observation`` on the
+    checkpoint's own job, not a second job: gathered in that job's
+    result stage, where Spark applies each partition's update once
+    even when a task is retried, so they are as exact as an
+    aggregate."""
+    obs = Observation()
+    df = df.observe(
+        obs, *(F.coalesce(c, F.lit(0)).alias(n) for n, c in aggs.items())
+    ).localCheckpoint(eager=True)
+    return df, {n: int(v) for n, v in obs.get.items()}
+
+
 def _checkpoint_counting(graph: DataFrame) -> tuple[DataFrame, int]:
     """``graph`` checkpointed eagerly, with its exact count of new
-    entries. The count is an ``Observation`` on the checkpoint's own
-    job, not a second job: it is gathered in that job's result stage,
-    where Spark applies each partition's update once even when a task
-    is retried, so it is as exact as an aggregate."""
-    obs = Observation()
-    graph = graph.observe(
-        obs, F.coalesce(F.sum(F.size(_new_entries())), F.lit(0)).alias("u")
-    ).localCheckpoint(eager=True)
-    return graph, int(obs.get["u"])
+    entries (:func:`_checkpoint_observing`)."""
+    graph, m = _checkpoint_observing(graph, u=F.sum(F.size(_new_entries())))
+    return graph, m["u"]
+
+
+def _fits_broadcast(spark: SparkSession, n_bytes: int) -> bool:
+    """Whether a join side of about ``n_bytes`` is within the session's
+    autoBroadcastJoinThreshold: the planner's own broadcast rule,
+    applied to a size the caller counted, since a checkpoint carries
+    only its plan's estimated statistics, which overflow after a join
+    or an explode."""
+    return n_bytes <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
 def _converged(
@@ -712,57 +726,45 @@ def _flag_old(col: str = "neighbors"):
 
 
 def _load(active: DataFrame, prev: DataFrame, ids: DataFrame) -> DataFrame:
-    """Touched-table rows (id, neighbors, prev, partition, features)
-    for the ids in ``ids`` (column ``lid``, duplicates allowed) that
-    have a vector in ``active``: the float32 vector and the partition
-    from ``active``, and the stored list from ``prev`` — kept as
-    ``prev`` (null for a point without one) and, flagged old, as the
-    current list. The stored tables are only scanned: ``ids`` and the
-    ``prev`` rows it selects are the two broadcasts."""
+    """Rows (id, prev, partition, float32 features) of the ids in
+    ``ids`` (column ``lid``, duplicates allowed) that have a vector in
+    ``active``; ``prev`` is the stored list, null for a new point. Both
+    tables are scanned under a broadcast of ``ids``; the planner joins
+    the two scans."""
     ids = F.broadcast(ids)
     pts = active.join(ids, F.col("id") == F.col("lid"), "left_semi")
     old = prev.join(ids, F.col("id") == F.col("lid"), "left_semi")
     return pts.join(
-        F.broadcast(old.select("id", F.col("neighbors").alias("prev"))), "id", "left"
+        old.select("id", F.col("neighbors").alias("prev")), "id", "left"
     ).select(
-        "id", _flag_old("prev").alias("neighbors"), "prev", "partition",
+        "id", "prev", "partition",
         F.col("features").cast("array<float>").alias("features"),
     )
 
 
-def _next_touched(u: DataFrame, cands: DataFrame, k: int) -> tuple[DataFrame, int]:
-    """A7/A12 merge of one sparse round: every row of the touched rows
-    ``u`` merged with the candidate stream — a row that received none
-    keeps its list with its flags cleared, since its list is in merge
-    order — then joined back to its vector, partition and stored list.
-    Only (id, nb_id, sim) rows cross the merge's exchange; the rest of
-    ``u`` is broadcast into the join. Checkpointed, with its count of
-    new entries (:func:`_checkpoint_counting`)."""
-    merged = _merge(u.select("id", "neighbors"), cands, k)
-    return _checkpoint_counting(merged.join(F.broadcast(u.drop("neighbors")), "id"))
-
-
 def _live_groups(
-    t: DataFrame, prev: DataFrame, reverse: DataFrame, sample_rate: float,
-    seed: int, iteration: int,
-) -> DataFrame:
-    """A8–A10 of one sparse round, read from the touched table ``t``:
-    the live groups' raw (v, member, is_new) rows, checkpointed, each
-    flagged ``fresh`` when its member is not yet a row of ``t``.
+    t: DataFrame, loaded: DataFrame, prev: DataFrame, reverse: DataFrame,
+    sample_rate: float, seed: int, iteration: int,
+) -> tuple[DataFrame, dict]:
+    """A8–A10 of one sparse round, read from the touched lists ``t``:
+    the live groups' raw (v, member, is_new) rows, checkpointed with
+    their count, each flagged ``fresh`` when its member is not yet a
+    row of ``loaded``.
 
     Live groups are ``t``'s rows holding a new entry and the targets of
     those entries: a group A(v) gains a new member only through v's own
     list or a reverse edge from such a row. B(v) is ``t``'s list, or the
-    stored one for a live id ``t`` lacks; R(v) is ``t``'s edges into live
-    targets plus the stored ``reverse`` pairs of sources ``t`` lacks.
-    The live ids and ``t``'s ids are the two broadcasts."""
+    stored one for a live id not yet loaded; R(v) is ``t``'s edges into
+    live targets plus the stored ``reverse`` pairs of sources not yet
+    loaded (a loaded row missing from ``t`` has an empty list: the merge
+    drops only rows without an edge)."""
     new = _new_entries()
     live = t.filter(F.size(new) > 0).select(F.col("id").alias("lid")).unionByName(
         t.select(F.explode(F.transform(new, lambda n: n["id"])).alias("lid"))
     )
-    tid = F.broadcast(t.select(F.col("id").alias("tid")))
+    tid = F.broadcast(loaded.select(F.col("id").alias("tid")))
     is_live = F.col("id") == F.col("lid")
-    own = t.select("id", "neighbors").join(F.broadcast(live), is_live, "left_semi")
+    own = t.join(F.broadcast(live), is_live, "left_semi")
     stored = (
         prev.join(F.broadcast(live), is_live, "left_semi")
         .join(tid, F.col("id") == F.col("tid"), "left_anti")
@@ -790,10 +792,11 @@ def _live_groups(
     adj = fwd.unionByName(
         _sample_reverse(rev_t.unionByName(rev_s), sample_rate, seed, iteration)
     ).unionByName(self_m)
-    return (
-        adj.join(tid, F.col("member") == F.col("tid"), "left")
-        .select("v", "member", "is_new", F.col("tid").isNull().alias("fresh"))
-        .localCheckpoint(eager=True)
+    return _checkpoint_observing(
+        adj.join(tid, F.col("member") == F.col("tid"), "left").select(
+            "v", "member", "is_new", F.col("tid").isNull().alias("fresh")
+        ),
+        rows=F.count(F.lit(1)),
     )
 
 
@@ -812,55 +815,62 @@ def _descend_sparse(
     on_iteration=None,
 ) -> DataFrame:
     """The NN-Descent loop for INCREMENTAL updates, from the
-    checkpointed init candidates ``cands``, whose receiving rows seed
-    one checkpointed table of touched rows
-    T = (id, neighbors, prev, partition, features): the working list,
-    the stored list ``prev`` (null for a new point), the partition and
-    the float32 vector of every row the update has read so far. The
-    working graph is T's list inside T and ``prev``'s outside; ``prev``
-    and the ``reverse`` pairs of its edges (id = target, src) are only
-    scanned, never exploded, joined or materialized at corpus size.
+    checkpointed init candidates ``cands``, over two checkpointed tables
+    that grow with the rows the update reads: the touched lists
+    T = (id, neighbors) and the loaded rows L = (id, prev, partition,
+    features), read from the stored tables once. The working graph is
+    T's list inside T and ``prev``'s outside; ``prev`` and its
+    ``reverse`` pairs (id = target, src) are only scanned.
 
-    Per round, row for row what the dense loop with inert groups
-    pruned would do (same groups, same candidates, same merge order),
-    in three checkpoints, so each stored table is scanned once:
+    Per round, row for row what the dense loop with inert groups pruned
+    would do, in three checkpoints: the live groups (:func:`_live_groups`);
+    the L rows of the members L lacks (:func:`_load`), whose stored
+    lists, flagged old, join T; and the next T, where the local join
+    reads vectors from L and K-th similarities from T, and the merge,
+    whose checkpoint job also counts the new entries. T's lists are in
+    merge order, so a row no round touches keeps its stored list.
 
-    - the live groups' raw rows, read from T and, for what T lacks, the
-      stored tables (:func:`_live_groups`);
-    - the rows of the members T lacks (:func:`_load`, one broadcast of
-      their ids);
-    - the next T: every member's vector and K-th similarity come from
-      T and those rows, and the local join (:func:`_local_join`) and
-      the merge (:func:`_next_touched`) run over them; the
-      checkpoint's job also counts the new entries for the stop rule.
-
-    Rows T holds but no round touches keep their stored list: T's lists
-    are in merge order, so the merge returns them unchanged with their
-    flags cleared. Every exchange is O(touched): id rows, the members'
-    vectors into their blocks, and the id-only merge. Returns the last
-    T."""
-    t, _ = _next_touched(
-        _load(active, prev, cands.select(F.col("id").alias("lid"))), cands, k
+    Every exchange is O(touched). Id sets are broadcast; the (block,
+    member) pairs, the K-th similarities and L's stored lists only while
+    the sizes the checkpoints counted fit :func:`_fits_broadcast`.
+    Returns the last T joined to L's (prev, partition)."""
+    spark, rows = active.sparkSession, F.count(F.lit(1))
+    loaded, n = _checkpoint_observing(
+        _load(active, prev, cands.select(F.col("id").alias("lid"))), rows=rows
+    )
+    n_loaded = n["rows"]
+    t, _ = _checkpoint_counting(
+        _merge(loaded.select("id", _flag_old("prev").alias("neighbors")), cands, k)
     )
     for iteration in range(max_iterations):
-        adj = _live_groups(t, prev, reverse, sample_rate, seed, iteration)
-        # members T lacks join it, read once from the stored tables;
-        # every member's vector and K-th similarity then come from T
-        fresh = adj.filter("fresh").select(F.col("member").alias("lid"))
-        u = t.unionByName(_load(active, prev, fresh).localCheckpoint(eager=True))
-        feats_iter = u.select(
-            F.col("id").alias("member"), F.col("features").alias("member_features"),
-            _kth_sim(k),
+        adj, n = _live_groups(t, loaded, prev, reverse, sample_rate, seed, iteration)
+        fresh, m = _checkpoint_observing(
+            _load(active, prev, adj.filter("fresh").select(F.col("member").alias("lid"))),
+            rows=rows,
+        )
+        n_loaded += m["rows"]
+        t = t.unionByName(fresh.select("id", _flag_old("prev").alias("neighbors")))
+        loaded = loaded.unionByName(fresh)
+        kth = t.select(F.col("id").alias("member"), _kth_sim(k))
+        feats_iter = _with_kth(
+            loaded.select(
+                F.col("id").alias("member"), F.col("features").alias("member_features")
+            ),
+            F.broadcast(kth) if _fits_broadcast(spark, 16 * n_loaded) else kth,
         )
         cands = _local_join(
-            adj.drop("fresh"), feats_iter, k, n_blocks, broadcast_pairs=True
+            adj.drop("fresh"), feats_iter, k, n_blocks,
+            broadcast_pairs=_fits_broadcast(spark, 16 * n["rows"]),
         )
-        t, updated = _next_touched(u, cands, k)
+        t, updated = _checkpoint_counting(_merge(t, cands, k))
         if _converged(
             updated, iteration + 1, on_iteration, early_termination, k, threshold_n
         ):
             break
-    return t
+    fixed = loaded.select("id", "prev", "partition")
+    if _fits_broadcast(spark, 32 * (k + 1) * n_loaded):
+        fixed = F.broadcast(fixed)
+    return t.join(fixed, "id")
 
 
 def update_graph(
@@ -934,25 +944,18 @@ def update_graph_delta(
     join, not the diff — is O(corpus). Inputs may be lazy parquet
     scans; they are read, never cached or checkpointed here.
 
-    Incremental shape (BOTH compute and shuffle scale with the new
-    batch's TOUCHED NEIGHBORHOOD — O(min(corpus,
-    batch·draws·bucket_size·K̄)), since each descent hop activates the
-    candidate-receivers' neighbor groups; corpus-independent once the
-    corpus exceeds that bound — never with the corpus itself):
+    Compute and shuffle scale with the batch's TOUCHED NEIGHBORHOOD,
+    O(min(corpus, batch·draws·bucket_size·K̄)), never the corpus:
 
     - init: only new points' bucket cohorts run the init kernel (bucket
       membership is a pure function of the feature hash, so old members
-      land in the buckets they did at build time), and the
-      candidate-receiving rows seed the touched table;
-    - iterations run :func:`_descend_sparse` over that table — the prev
-      graph is never exploded or re-merged, and rows it never touches
-      are never read;
-    - convergence denominator is the NEW-point count (``updated ≤
-      δ·K·N_new``), since a converged bulk would otherwise mask new
-      points' churn;
-    - the result is a projection of the last touched table, which
-      carries each row's stored list and partition: no join back to
-      ``prev`` or to the points.
+      land in the buckets they did at build time);
+    - iterations run :func:`_descend_sparse` from the candidate-receiving
+      rows; rows it never touches are never read;
+    - the stop rule counts against the NEW points (``updated ≤
+      δ·K·N_new``), since a converged bulk would mask their churn;
+    - the diff compares the touched lists with the stored lists the loop
+      loaded: no join back to ``prev`` or to the points.
 
     ``new_ids`` (optional) skips the new-arrival anti-join when the
     caller already knows the batch ids (the persisted index's extend,

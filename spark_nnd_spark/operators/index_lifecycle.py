@@ -42,16 +42,6 @@ from pyspark.sql import functions as F
 TableSpec = tuple[str, str, str | None]
 
 
-def read_table(spark, path: str, table: str, schemas: dict | None = None) -> DataFrame:
-    """``{path}/{table}``, read with its fixed schema when ``schemas``
-    holds one for the table: Spark then runs no schema-inference job
-    over the files."""
-    reader = spark.read
-    if schemas and table in schemas:
-        reader = reader.schema(schemas[table])
-    return reader.parquet(f"{path}/{table}")
-
-
 def read_tombstones(spark, path: str) -> DataFrame | None:
     """The retracted ids as a one-column ('id') DataFrame, or None when
     the index has no tombstone log."""
@@ -80,16 +70,13 @@ def anti_tombstones(df: DataFrame, tomb: DataFrame | None, id_col: str) -> DataF
     )
 
 
-def rewrite_minus(
-    spark, path: str, ids: DataFrame, tables: list[TableSpec], schemas: dict | None = None
-) -> None:
+def rewrite_minus(spark, path: str, ids: DataFrame, tables: list[TableSpec]) -> None:
     """Rewrite the given index tables without ``ids`` (one-column 'id'
     DataFrame) — the physical-delete kernel shared by compact (all
     tombstones) and the re-admission upsert in extend (just the
     overlap). Each rewrite is an idempotent anti-join; the eager
     localCheckpoints detach ids and each table from the files being
-    overwritten. ``schemas`` (optional) fixes the tables' read schemas
-    (:func:`read_table`)."""
+    overwritten."""
     ids = ids.localCheckpoint(eager=True)  # survives any dir's rewrite
     for spec in tables:
         tbl, tbl_id, part = spec[0], spec[1], spec[2]
@@ -98,7 +85,7 @@ def rewrite_minus(
         # postings are token-sorted for row-group pruning; a rewrite
         # must not flatten that)
         layout = spec[3] if len(spec) > 3 else None
-        cur = read_table(spark, path, tbl, schemas)
+        cur = spark.read.parquet(f"{path}/{tbl}")
         kept = cur.join(
             F.broadcast(ids.select(F.col("id").alias(tbl_id))), tbl_id, "left_anti"
         ).localCheckpoint(eager=True)
@@ -131,7 +118,6 @@ def settle_upsert(
     new_ids: DataFrame,
     tables: list[TableSpec],
     roster: TableSpec | None = None,
-    schemas: dict | None = None,
 ) -> None:
     """The FULL upsert half of extend: settle tombstoned overlap
     (purge + clear tombstones, :func:`settle_readmission`), then purge
@@ -147,27 +133,23 @@ def settle_upsert(
     fps, BM25) pass a doc-grain roster explicitly so the common
     no-overlap path reads O(docs) rows, never O(postings). The purge
     itself (rare path: only when an actual duplicate arrives) is the
-    shared targeted rewrite over all tables. ``schemas`` (optional)
-    fixes the tables' read schemas (:func:`read_table`)."""
-    settle_readmission(spark, path, new_ids, tables, schemas)
+    shared targeted rewrite over all tables."""
+    settle_readmission(spark, path, new_ids, tables)
     r = roster if roster is not None else tables[0]
-    ids = new_ids.select(F.col(new_ids.columns[0]).alias("id"))
+    ids = new_ids.select(F.col(new_ids.columns[0]).alias("id")).distinct()
     live = (
-        read_table(spark, path, r[0], schemas)
+        spark.read.parquet(f"{path}/{r[0]}")
         .select(F.col(r[1]).alias("id"))
         .join(F.broadcast(ids), "id", "left_semi")
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    # one job scans the whole roster (a bare take(1) would rescan it in
-    # growing rounds when nothing matches); rewrite_minus detaches the
-    # ids from the files it rewrites, and duplicates are harmless to its
-    # anti-joins
-    if live.coalesce(1).take(1):
-        rewrite_minus(spark, path, live, tables, schemas)
+    if live.take(1):
+        rewrite_minus(spark, path, live, tables)
 
 
 def settle_readmission(
-    spark, path: str, new_ids: DataFrame, tables: list[TableSpec],
-    schemas: dict | None = None,
+    spark, path: str, new_ids: DataFrame, tables: list[TableSpec]
 ) -> None:
     """The upsert half of extend: purge the physical rows of any
     incoming ids that are tombstoned, then clear their tombstones
@@ -180,7 +162,7 @@ def settle_readmission(
     readmitted = tomb.join(F.broadcast(new_ids), "id", "left_semi")
     if readmitted.isEmpty():
         return
-    rewrite_minus(spark, path, readmitted, tables, schemas)
+    rewrite_minus(spark, path, readmitted, tables)
     remaining = tomb.join(F.broadcast(new_ids), "id", "left_anti").localCheckpoint(
         eager=True
     )

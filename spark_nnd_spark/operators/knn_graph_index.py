@@ -87,7 +87,9 @@ _SCHEMAS = {
 
 
 def _read(spark: SparkSession, path: str, table: str) -> DataFrame:
-    return IL.read_table(spark, path, table, _SCHEMAS)
+    """``{path}/{table}`` read with its fixed schema: no
+    schema-inference job over the files."""
+    return spark.read.schema(_SCHEMAS[table]).parquet(f"{path}/{table}")
 
 
 # Upsert/purge table specs (id column, partition column). ``reverse`` is
@@ -371,12 +373,13 @@ def extend_knn_graph_index(
     the larger batches saturate the test corpora and track
     min(corpus, ·)).
 
-    The update keeps the rows it touches in one checkpointed table, so
-    each hop costs a fixed number of Spark jobs (13 on the nndbench
-    index), and the delta it returns is a projection of that table,
-    written without a further join. Pending deltas and tombstones add their resolution
-    (the latest delta per id, the tombstone ids) to the stored views
-    the update scans; both are checkpointed once per extend.
+    The update keeps the rows it touches in two checkpointed tables
+    (their working lists; their stored lists, partitions and vectors),
+    so each hop costs a fixed number of Spark jobs (13 on the nndbench
+    index), and the delta it returns joins the two, never the stored
+    graph. Pending deltas and tombstones add their resolution (the
+    latest delta per id, the tombstone ids) to the stored views the
+    update scans; both are checkpointed once per extend.
 
     Re-admission of tombstoned ids is the standard upsert
     (index_lifecycle.settle_readmission: purge old physical rows,
@@ -398,7 +401,7 @@ def extend_knn_graph_index(
         tables.append(("updates", "id", None))
     IL.settle_upsert(
         spark, path, new_pts.select("id"), tables,
-        roster=("points", "id", "partition"), schemas=_SCHEMAS,
+        roster=("points", "id", "partition"),
     )
 
     # Lazy, tombstone-masked views pinned AFTER the upsert and BEFORE
@@ -427,7 +430,7 @@ def extend_knn_graph_index(
 
     m = _meta(spark, path)
     # Delta = rows whose neighbor list changed (new ids have no prev
-    # row), a projection of the update's last checkpoint.
+    # row), read from the update's own checkpoints.
     changed = update_graph_delta(
         prev_adj,
         all_pts,

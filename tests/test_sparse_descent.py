@@ -239,6 +239,27 @@ def test_delta_equals_reference_with_sampled_reverse_edges(spark, tie_fixture):
     )
 
 
+def test_delta_equals_reference_past_the_broadcast_threshold(spark, tie_fixture):
+    """With autoBroadcastJoinThreshold off, the pairs, K-th similarities
+    and stored lists join through exchanges, as on a large touched set,
+    and the rows and update counts are still the replaced loop's."""
+    pts, prev = tie_fixture
+    kw = dict(k=4, max_iterations=2, early_termination=0.0, seed=9)
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        got_its, want_its = [], []
+        got = _rows(update_graph_delta(
+            prev, pts, on_iteration=lambda i, u: got_its.append((i, u)), **kw
+        ))
+        want = _rows(_reference_update_delta(
+            prev, pts, on_iteration=lambda i, u: want_its.append((i, u)), **kw
+        ))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    assert got == want and got_its == want_its and len(got) > 24
+
+
 def test_lone_new_point_writes_no_row(spark, tie_fixture):
     """A new point alone in its partition draws no init candidate, so the
     touched table stays empty through every hop (each checkpoint still
@@ -315,11 +336,11 @@ def _extend_jobs(spark, d, batch, group):
 
 # Spark jobs one sparse hop may add to an extend. A hop takes three
 # checkpoints, each one job plus its exchanges: the live groups
-# (live-id and touched-id broadcasts), the fresh members' rows
-# (member-id and stored-row broadcasts) and the next touched table (the
+# (live-id and loaded-id broadcasts), the fresh members' rows
+# (member-id and stored-row broadcasts) and the next touched lists (the
 # local join's pair exchange and broadcast and its two block exchanges,
-# the merge exchange, the touched-row broadcast). That is 13 jobs on
-# the nndbench index at any data size; the replaced loop paid 30.
+# the merge exchange, the K-th similarity broadcast). That is 13 jobs
+# on the nndbench index; the replaced loop paid 30.
 HOP_JOB_BUDGET = 15
 
 
