@@ -885,7 +885,6 @@ def update_graph(
     validate: bool = True,
     on_iteration=None,
     new_ids: DataFrame | None = None,
-    reverse: DataFrame | None = None,
 ) -> DataFrame:
     """Incrementally fold new points into an existing K-NN graph.
 
@@ -900,7 +899,7 @@ def update_graph(
     changed rows over ``prev`` — ``prev``'s list for every id the
     update left unchanged, the delta's list for every other — and
     joins them back to ``df`` as :func:`build_graph` does.
-    ``new_ids`` and ``reverse`` pass through to it.
+    ``new_ids`` passes through to it.
 
     Returns the same output schema as ``build_graph`` over ``df``.
     """
@@ -911,7 +910,7 @@ def update_graph(
     prev_nb = prev.select("id", "neighbors").persist()
     changed = update_graph_delta(
         prev_nb, points, k, max_iterations, early_termination, sample_rate,
-        buckets_per_instance, seed, on_iteration, new_ids, reverse,
+        buckets_per_instance, seed, on_iteration, new_ids,
     ).select("id", "neighbors")
     stable = prev_nb.join(F.broadcast(changed.select("id")), "id", "left_anti")
     result = _assemble(points, stable.unionByName(changed))
@@ -931,7 +930,6 @@ def update_graph_delta(
     seed: int = 42,
     on_iteration=None,
     new_ids: DataFrame | None = None,
-    reverse: DataFrame | None = None,
 ) -> DataFrame:
     """The incremental update (see :func:`update_graph` for ``prev``
     and ``df``), returning ONLY the changed rows — (id, neighbors,
@@ -951,7 +949,8 @@ def update_graph_delta(
       membership is a pure function of the feature hash, so old members
       land in the buckets they did at build time);
     - iterations run :func:`_descend_sparse` from the candidate-receiving
-      rows; rows it never touches are never read;
+      rows; rows it never touches are scanned, never exchanged, and its
+      reverse pairs are ``prev``'s lists exploded inside that scan;
     - the stop rule counts against the NEW points (``updated ≤
       δ·K·N_new``), since a converged bulk would mask their churn;
     - the diff compares the touched lists with the stored lists the loop
@@ -960,21 +959,17 @@ def update_graph_delta(
     ``new_ids`` (optional) skips the new-arrival anti-join when the
     caller already knows the batch ids (the persisted index's extend,
     whose upsert guarantees batch ids are absent from the store).
-    ``reverse`` (optional) supplies prev-graph reverse pairs
-    (id=target, src) — e.g. the index family's maintained sidecar —
-    so the prev adjacency is never re-exploded for reverse expansion.
     """
     points = normalize_points(df)
     active = points.filter(~F.col("finished")).select(
         "id", "features", "partition"
     )
     prev_nb = prev.select("id", "neighbors")
-    if reverse is None:
-        # map-side explode of prev (no shuffle); callers with a
-        # persisted sidecar skip even this scan-time explode
-        reverse = prev_nb.select(
-            F.col("id").alias("src"), F.explode("neighbors").alias("nb")
-        ).select(F.col("nb.id").alias("id"), "src")
+    # reverse pairs (id = target, src): a map-side explode of prev, no
+    # shuffle; each hop reads only the live targets' pairs
+    reverse = prev_nb.select(
+        F.col("id").alias("src"), F.explode("neighbors").alias("nb")
+    ).select(F.col("nb.id").alias("id"), "src")
     if new_ids is None:
         new_ids = (
             active.select("id").join(prev_nb.select("id"), "id", "left_anti")
@@ -1012,7 +1007,7 @@ def update_graph_delta(
         .localCheckpoint(eager=True)
     )
     t = _descend_sparse(
-        active, prev_nb, reverse.select("id", "src"), init_cands, k,
+        active, prev_nb, reverse, init_cands, k,
         max_iterations, early_termination, sample_rate, seed, n_new, n_blocks,
         on_iteration,
     )

@@ -6,12 +6,16 @@ the HNSW/NSW manner (Malkov & Yashunin 2016).
 Algorithm (best-first with an ``ef``-bounded candidate pool):
 
 - seed every query with its ``n_entry`` nearest anchors PER GRAPH
-  PARTITION: the graph has no cross-``partition`` edges
-  (NND.scala:296-306), so per-partition seeding is what makes every
-  walled component reachable. ``n_entry`` is also the coverage knob
-  for NATURAL components (one per well-separated cluster): size it to
-  the expected cluster count, as a missed component is
-  ~((C-1)/C)^n_entry rare for C same-sized clusters;
+  PARTITION, the partition's ``n_anchors`` rows with the smallest
+  ``xxhash64(id, seed)`` draw: the graph has no cross-``partition``
+  edges (NND.scala:296-306), so per-partition seeding is what makes
+  every walled component reachable. With ``n_anchors = n_entry``
+  (flat seeding) every query seeds from the same draws, and
+  ``n_entry`` is the coverage knob for NATURAL components (one per
+  well-separated cluster): size it to the expected cluster count, as
+  a missed component is ~((C-1)/C)^n_entry rare for C same-sized
+  clusters. A larger anchor sample (the HNSW upper-layer move) lets
+  each query start near its own region at small ``n_entry``;
 - iterate: expand the best ``beam`` unexpanded candidates, score
   their neighbors against the query, keep the top-``ef`` pool; stop
   when no pool entry is unexpanded or after ``max_iterations`` hops;
@@ -23,8 +27,9 @@ does, so scores equal the SQL metric's to the last bit. Expansion is
 UNDIRECTED (out- ∪ reverse neighbors, NN-Descent's B(v) ∪ R(v)): a
 node freshly folded in by ``update_graph`` has no in-edges, so a
 directed walk could never reach it. The walker derives reverse edges
-from the rows it holds and drops a listed id that is not a row (a
-masked or retracted node).
+and its anchors from the rows it holds, so a listed id that is not a
+row (a masked or retracted node) is dropped, and an anchor that is not
+a row is replaced by the next-ranked one.
 
 Execution: a walk never leaves its partition, so a batch is one Arrow
 cogroup — the graph's rows grouped by ``partition`` on one side, the
@@ -67,26 +72,6 @@ def _sim(q: str, x: str):
     return F.lit(1.0) / (F.lit(1.0) + l2_distance_expr(q, x))
 
 
-def _entry_window(seed: int, *by: str):
-    return Window.partitionBy(*by).orderBy(
-        F.xxhash64("id", F.lit(seed)), F.asc("id")
-    )
-
-
-def entry_points(
-    points: DataFrame, n_entry: int, seed: int
-) -> DataFrame:
-    """``n_entry`` deterministic seeds per graph ``partition`` (graph
-    edges never cross partitions): the rows with the smallest
-    ``xxhash64(id, seed)`` draw, stable across runs and rotating with
-    ``seed``. Returns (id, features, partition), an anchor layer."""
-    return (
-        points.withColumn("__r", F.row_number().over(_entry_window(seed, "partition")))
-        .filter(F.col("__r") <= n_entry)
-        .select("id", "features", "partition")
-    )
-
-
 def graph_search_topk(
     graph: DataFrame,
     queries: DataFrame,
@@ -98,7 +83,7 @@ def graph_search_topk(
     seed: int = 42,
     query_id_col: str = "query_id",
     query_vec_col: str = "q_vec",
-    anchors: DataFrame | None = None,
+    n_anchors: int | None = None,
 ) -> DataFrame:
     """Top-k nearest stored neighbors of each query vector, served by
     greedy best-first search over ``graph`` (a ``build_graph`` /
@@ -106,15 +91,16 @@ def graph_search_topk(
     masked out of ``graph`` can neither seed nor surface, and stale
     in-list references to them are dropped.
 
-    ``anchors`` optionally supplies a COARSE ENTRY LAYER (ids of a
-    persisted sample of graph nodes, the HNSW upper-layer move): every
-    query seeds from its partition's ``n_entry`` NEAREST anchors, each
-    scored with its row's vector; ids that are not rows of ``graph``
-    are ignored. Without it, :func:`entry_points`' ``n_entry`` draws
-    per partition seed every query, which needs n_entry ≈ the
-    component count for coverage (BENCH_GS_SWEEP: recall 0.19@16 →
-    1.0@256 on 64 clusters); nearest-anchor seeding reaches that
-    recall at small n_entry for an O(|anchors|·Q) scoring pass.
+    Each partition's anchors are its ``n_anchors`` rows (default
+    ``n_entry``) with the smallest ``xxhash64(id, seed)`` draw, ties by
+    id: stable across runs, rotating with ``seed``, and drawn from the
+    rows of ``graph`` alone. Every query seeds from its partition's
+    ``min(n_entry, ef)`` NEAREST anchors. At the default every query
+    seeds from the same draws, which needs n_entry ≈ the component
+    count for coverage (BENCH_GS_SWEEP: recall 0.19@16 → 1.0@256 on 64
+    clusters); a larger ``n_anchors`` (a COARSE ENTRY LAYER, the HNSW
+    upper-layer move) reaches that recall at small n_entry for an
+    O(n_anchors·Q) scoring pass per partition.
 
     Query vectors holding a null, NaN or infinite element, of ragged
     lengths, or of a dimension other than the stored vectors' raise
@@ -153,23 +139,15 @@ def graph_search_topk(
         F.col("features").cast("array<double>").alias("features"),
         "partition",
         F.transform("neighbors", lambda s: s["id"]).alias("nb_ids"),
+        F.xxhash64("id", F.lit(seed)).alias("h"),
         F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("chunk"),
     )
-    if anchors is None:
-        is_anchor = (
-            F.row_number().over(_entry_window(seed, "partition", "chunk")) <= n_entry
-        )
-    else:
-        rows = rows.join(
-            F.broadcast(anchors.select("id", F.lit(True).alias("__a"))),
-            "id",
-            "left",
-        )
-        is_anchor = F.coalesce("__a", F.lit(False))
     key = ("partition", "chunk")
-    rows = rows.select("id", "features", *key, "nb_ids", is_anchor.alias("is_anchor"))
     local = rows.groupBy(*key).cogroup(q.groupBy(*key)).applyInArrow(
-        _walk_kernel(k, ef, beam, n_entry, max_iterations),
+        _walk_kernel(
+            k, ef, beam, n_entry, n_entry if n_anchors is None else n_anchors,
+            max_iterations,
+        ),
         f"query_id {q.schema['query_id'].dataType.simpleString()}, "
         "nb_id long, sim double",
     )
@@ -259,11 +237,14 @@ def _large(col: pa.ChunkedArray) -> pa.ChunkedArray:
     return col.cast(pa.large_list(col.type.value_type))
 
 
-def _walk_kernel(k: int, ef: int, beam: int, n_entry: int, max_iterations: int):
+def _walk_kernel(
+    k: int, ef: int, beam: int, n_entry: int, n_anchors: int, max_iterations: int
+):
     """One graph partition's walker: ``rows`` holds the partition's
-    graph rows (id, features, nb_ids, is_anchor), ``qs`` one chunk of
-    the query batch (query_id, q_vec). Every query runs its whole walk
-    here; returns each query's local top-k as (query_id, nb_id, sim).
+    graph rows (id, features, nb_ids, h), ``qs`` one chunk of the query
+    batch (query_id, q_vec). The anchors are the ``n_anchors`` rows of
+    smallest (h, id). Every query runs its whole walk here; returns
+    each query's local top-k as (query_id, nb_id, sim).
 
     Rows are sorted by id, so a row index orders like its id and one
     ``np.lexsort`` on (index, -sim) ranks by (sim desc, id asc). A
@@ -294,9 +275,8 @@ def _walk_kernel(k: int, ef: int, beam: int, n_entry: int, max_iterations: int):
             by = np.argsort(a, kind="stable")
             adj = b[by]
             ptr = np.r_[0, np.cumsum(np.bincount(a, minlength=n))]
-            anchors = np.flatnonzero(
-                rows.column("is_anchor").to_numpy(zero_copy_only=False)[order]
-            )
+            h = rows.column("h").to_numpy()[order]
+            anchors = np.lexsort((ids, h))[:n_anchors]  # smallest (h, id)
             qv = _float_matrix(qs.column("q_vec"))
             seed_sims = _sims(x[anchors], qv)
             for qi in range(len(qv)):

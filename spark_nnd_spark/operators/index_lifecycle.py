@@ -24,15 +24,10 @@ anti-join per index table they scan; compaction is the only O(index)
 rewrite and runs on the operator's schedule, not the ingest path.
 Rewrites detach from the files they replace with an eager
 localCheckpoint, then overwrite them in place.
-
-Tombstone existence is a local-filesystem check (this repo's indexes
-are local dirs); an HDFS/S3 deployment swaps in FileSystem.exists —
-the read path is engine-identical either way.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame
@@ -42,11 +37,20 @@ from pyspark.sql import functions as F
 TableSpec = tuple[str, str, str | None]
 
 
+def exists(spark, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem its
+    scheme names (local, HDFS, S3, ...), as Spark's own reads do."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    return hpath.getFileSystem(conf).exists(hpath)
+
+
 def read_tombstones(spark, path: str) -> DataFrame | None:
     """The retracted ids as a one-column ('id') DataFrame, or None when
     the index has no tombstone log."""
     tdir = f"{path}/tombstones"
-    if not os.path.isdir(tdir):
+    if not exists(spark, tdir):
         return None
     return spark.read.parquet(tdir).select("id").distinct()
 

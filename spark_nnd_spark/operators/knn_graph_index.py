@@ -11,33 +11,28 @@ Layout under ``{path}``:
   ``partition`` — the vector table every probe's walkers read;
 - ``adjacency/``  (id, neighbors) hive-partitioned by ``partition`` —
   the base graph as of the last build/compaction;
-- ``reverse/``    (id, src) REVERSE-edge pairs hive-partitioned by
-  ``partition`` — one row per adjacency edge, keyed by TARGET: ``src``
-  lists ``id`` among its neighbors (edges never cross ``partition``,
-  so the pair inherits its row's partition). Extend's undirected
-  expansion reads this as an id-keyed lookup instead of re-deriving
-  reverse edges by exploding the full adjacency (a probe's walker
-  derives them from the rows it holds) — written at build/persist and
-  compact;
-- ``anchors/``    (id, features) hive-partitioned by ``partition`` — the
-  coarse entry layer: a deterministic per-partition sample of stored
-  nodes that searches with ``use_anchors`` seed from — written at
-  build/persist, pruned of tombstoned ids at compact;
 - ``updates/``    (id, neighbors, partition, batch) — append-only
   adjacency DELTAS from ``extend``; a row supersedes the base row (and
   any lower-``batch`` update) for its id;
 - ``meta/``       build parameters pinned so extend replays the build
-  configuration;
+  configuration, and the anchor count (``n_anchors``) and ``seed`` of
+  anchor-seeded searches;
 - ``tombstones/`` the shared O(retracted) delete log
   (operators/index_lifecycle).
+
+Nothing derived from these tables is stored. Reverse edges are the
+resolved adjacency exploded where they are read: inside extend's scan,
+and inside each probe's walker. Anchors are drawn by each walker from
+the live rows it holds (nnd/search), so a retracted anchor is replaced
+by the next-ranked live row and an ingested point can become one.
 
 What each operation costs:
 
 - **extend reads and writes O(batch neighborhood)**:
   ``update_graph_delta`` (nnd/descent) bounds every exchange to the
-  rows the batch touches — the stored graph is scanned, never
-  exploded, joined, or materialized at corpus size, and reverse
-  expansion reads the maintained sidecar; the delta write covers only
+  rows the batch touches — the stored graph is scanned, never joined
+  or materialized at corpus size (reverse expansion explodes its lists
+  map-side within the scan); the delta write covers only
   rows whose neighbor list actually changed — the base adjacency is
   never rewritten on ingest. Its Spark job count is fixed per update
   hop (tests/test_sparse_descent.py holds each hop to a budget).
@@ -66,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_nnd_spark.nnd.descent import build_graph, update_graph_delta
-from spark_nnd_spark.nnd.search import entry_points, graph_search_topk
+from spark_nnd_spark.nnd.search import graph_search_topk
 from spark_nnd_spark.operators import index_lifecycle as IL
 from spark_nnd_spark.schemas import normalize_points, validate_points
 
@@ -78,11 +73,10 @@ _SCHEMAS = {
     "points": "id bigint, features array<double>, label bigint, finished boolean, "
     "partition bigint",
     "adjacency": f"id bigint, neighbors {_NEIGHBOR_T}, partition bigint",
-    "reverse": "id bigint, src bigint, partition bigint",
-    "anchors": "id bigint, features array<double>, partition bigint",
     "updates": f"id bigint, neighbors {_NEIGHBOR_T}, partition bigint, batch bigint",
     "meta": "k bigint, max_iterations bigint, early_termination double, "
-    "sample_rate double, buckets_per_instance bigint, seed bigint",
+    "sample_rate double, buckets_per_instance bigint, seed bigint, "
+    "n_anchors bigint",
 }
 
 
@@ -92,24 +86,11 @@ def _read(spark: SparkSession, path: str, table: str) -> DataFrame:
     return spark.read.schema(_SCHEMAS[table]).parquet(f"{path}/{table}")
 
 
-# Upsert/purge table specs (id column, partition column). ``reverse`` is
-# keyed by ``src``: an upserted id's OLD out-edges must leave the sidecar
-# with its old adjacency row (its appearances as a target are resolved at
-# read time). An upserted id's stale anchor vector leaves with its old
-# rows; the batch's version re-enters only via a rebuild sample.
+# Upsert/purge table specs (id column, partition column).
 _TABLES: tuple[IL.TableSpec, ...] = (
     ("points", "id", "partition"),
     ("adjacency", "id", "partition"),
-    ("reverse", "src", "partition"),
-    ("anchors", "id", "partition"),
 )
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    jsc = spark.sparkContext._jsc  # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(jsc.hadoopConfiguration()).exists(hpath)
 
 
 def build_knn_graph_index(
@@ -160,7 +141,8 @@ def persist_graph_index(
     hold the artifact in memory and want the lifecycle without paying
     a rebuild. The params are pinned as meta so extend replays the
     build configuration; they must be the ones the graph was built
-    with."""
+    with. ``n_anchors`` and ``seed`` also fix the anchors of searches
+    with ``use_anchors`` (:func:`graph_index_search`)."""
     spark = graph.sparkSession
     # stored in the types of ``_SCHEMAS``, which every read assumes
     g = graph.select(
@@ -177,43 +159,18 @@ def persist_graph_index(
     adj.write.mode("overwrite").partitionBy("partition").parquet(
         f"{path}/adjacency"
     )
-    _write_reverse(_read(spark, path, "adjacency"), path)
-    # coarse entry layer (the HNSW-upper-layer move): searches opting in
-    # (use_anchors) seed from each query's NEAREST anchors instead of
-    # shared random entries — recall at small n_entry
-    entry_points(
-        _read(spark, path, "points"), int(n_anchors), int(seed)
-    ).write.mode("overwrite").partitionBy("partition").parquet(f"{path}/anchors")
     spark.createDataFrame(
         [(
             int(k), int(max_iterations), float(early_termination),
             float(sample_rate), int(buckets_per_instance), int(seed),
+            int(n_anchors),
         )],
-        "k long, max_iterations long, early_termination double, "
-        "sample_rate double, buckets_per_instance long, seed long",
+        _SCHEMAS["meta"],
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def _meta(spark: SparkSession, path: str) -> dict[str, Any]:
     return _read(spark, path, "meta").collect()[0].asDict()
-
-
-def _rev_pairs(adj: DataFrame) -> DataFrame:
-    """Adjacency exploded into reverse-edge pairs keyed by TARGET:
-    (id = the listed neighbor, src = the row that lists it). Edges
-    never cross ``partition`` (NND.scala:296-306 gates cross-partition
-    similarity to -inf), so the pair keeps its source row's value."""
-    return adj.select(
-        F.col("id").alias("src"),
-        F.explode(F.transform("neighbors", lambda s: s["id"])).alias("id"),
-        "partition",
-    ).select("id", "src", "partition")
-
-
-def _write_reverse(adj: DataFrame, path: str) -> None:
-    _rev_pairs(adj).write.mode("overwrite").partitionBy(
-        "partition"
-    ).parquet(f"{path}/reverse")
 
 
 def _latest_updates(spark: SparkSession, path: str) -> DataFrame:
@@ -239,29 +196,6 @@ def _latest_updates(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _resolved_reverse(
-    spark: SparkSession, path: str, latest: DataFrame | None = None
-) -> DataFrame:
-    """Reverse pairs equal (by construction) to exploding the
-    update-RESOLVED adjacency: base pairs whose ``src`` has no delta,
-    plus the latest delta rows exploded. The base side pays one
-    broadcast anti-join on src (O(updated) ids); only the O(updated)
-    delta rows are exploded at read time. ``latest`` lets a caller
-    that already resolved the deltas (the extend) share ONE
-    resolution instead of paying it per view."""
-    base = _read(spark, path, "reverse").select("id", "src")
-    if not _exists(spark, f"{path}/updates"):
-        return base
-    if latest is None:
-        latest = _latest_updates(spark, path)
-    # the checkpointed latest IS one row per updated id — its id column
-    # replaces the former second full pass + distinct over the updates
-    upd_ids = latest.select(F.col("id").alias("src"))
-    return base.join(F.broadcast(upd_ids), "src", "left_anti").unionByName(
-        _rev_pairs(latest).select("id", "src")
-    )
-
-
 def _resolved_adjacency(
     spark: SparkSession, path: str, latest: DataFrame | None = None
 ) -> DataFrame:
@@ -270,7 +204,7 @@ def _resolved_adjacency(
     exchange is the latest-per-id aggregate over the UPDATES table
     (_latest_updates); the base side pays one broadcast anti-join."""
     base = _read(spark, path, "adjacency")
-    if not _exists(spark, f"{path}/updates"):
+    if not IL.exists(spark, f"{path}/updates"):
         return base
     if latest is None:
         latest = _latest_updates(spark, path)
@@ -323,14 +257,25 @@ def graph_index_search(
     ingest gate (a retried micro-batch that partially admitted itself
     must still probe the exact pre-batch graph).
 
-    ``use_anchors=True`` seeds each query from its NEAREST stored
-    anchors (the coarse entry layer persisted at build) instead of
-    shared random entries — the recall-at-small-n_entry mode measured
-    in BENCH_GS_SWEEP. The walker ignores an anchor id that is not a
-    row of the masked graph, so a retracted or excluded anchor can
-    neither seed nor surface."""
+    ``use_anchors=True`` seeds each query from its NEAREST anchors —
+    the coarse entry layer, the recall-at-small-n_entry mode measured
+    in BENCH_GS_SWEEP — instead of shared random entries. The anchors
+    are the ``n_anchors`` and ``seed`` pinned in ``meta`` at persist
+    (the ``seed`` argument is then unused), drawn by each walker from
+    the rows of the masked graph: a retracted or excluded anchor can
+    neither seed nor surface, and the next-ranked live row takes its
+    place. An index whose ``meta`` has no ``n_anchors`` raises
+    ``ValueError``; persist it again."""
     g = read_graph(spark, path)
-    anchors = _read(spark, path, "anchors").select("id") if use_anchors else None
+    n_anchors = None
+    if use_anchors:
+        m = _meta(spark, path)
+        if m["n_anchors"] is None:
+            raise ValueError(
+                f"{path} was persisted without n_anchors: persist it again "
+                "before an anchor-seeded search"
+            )
+        n_anchors, seed = int(m["n_anchors"]), int(m["seed"])
     if exclude_ids is not None:
         ex = F.broadcast(
             exclude_ids.select(
@@ -349,7 +294,7 @@ def graph_index_search(
         seed=seed,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        anchors=anchors,
+        n_anchors=n_anchors,
     )
 
 
@@ -360,9 +305,9 @@ def extend_knn_graph_index(
     resulting adjacency CHANGES as a delta. Both compute AND shuffle
     scale with the batch NEIGHBORHOOD, not the corpus
     (nnd/descent.update_graph_delta): the stored graph is only ever
-    SCANNED — no O(corpus) materialization, explode, join, or diff
-    anywhere in the job. Reverse expansion during the update reads the
-    maintained sidecar, so even the scan-time explode is skipped.
+    SCANNED — no O(corpus) materialization, join, or diff anywhere in
+    the job. Reverse expansion explodes the resolved adjacency inside
+    that scan, map-side, and keeps only the live targets' pairs.
 
     The size of "neighborhood" (measured per stage): the batch's bucket
     cohorts receive candidates, and each descent hop activates the
@@ -392,12 +337,12 @@ def extend_knn_graph_index(
     # fails here, before anything is written
     validate_points(new_pts)
     # full upsert via the shared kernel: tombstoned AND still-live
-    # overlap purged from points + base adjacency + reverse sidecar +
-    # any update deltas, so the batch's version of each id wins; the
-    # live check reads the O(points) roster, and the purge rewrite
-    # only fires on actual overlap
+    # overlap purged from points + base adjacency + any update deltas,
+    # so the batch's version of each id wins; the live check reads the
+    # O(points) roster, and the purge rewrite only fires on actual
+    # overlap
     tables = list(_TABLES)
-    if _exists(spark, f"{path}/updates"):
+    if IL.exists(spark, f"{path}/updates"):
         tables.append(("updates", "id", None))
     IL.settle_upsert(
         spark, path, new_pts.select("id"), tables,
@@ -412,16 +357,13 @@ def extend_knn_graph_index(
         tomb = tomb.localCheckpoint(eager=True)
     latest = (
         _latest_updates(spark, path)
-        if _exists(spark, f"{path}/updates")
+        if IL.exists(spark, f"{path}/updates")
         else None
     )
     prev_adj = IL.anti_tombstones(
         _resolved_adjacency(spark, path, latest), tomb, "id"
     ).select("id", "neighbors")
     prev_pts = IL.anti_tombstones(_read(spark, path, "points"), tomb, "id")
-    rev = IL.anti_tombstones(
-        _resolved_reverse(spark, path, latest), tomb, "src"
-    )
     all_pts = prev_pts.select(
         "id", "features", "label", "partition", "finished"
     ).unionByName(
@@ -441,11 +383,10 @@ def extend_knn_graph_index(
         buckets_per_instance=int(m["buckets_per_instance"]),
         seed=int(m["seed"]),
         new_ids=new_pts.select("id"),
-        reverse=rev,
     )
 
     batch_no = 0
-    if _exists(spark, f"{path}/updates"):
+    if IL.exists(spark, f"{path}/updates"):
         # the overlap purge above may have emptied the table → max None
         prev_max = (
             _read(spark, path, "updates")
@@ -541,17 +482,7 @@ def compact_knn_graph_index(spark: SparkSession, path: str) -> None:
     pts.write.mode("overwrite").partitionBy("partition").parquet(
         f"{path}/points"
     )
-    # reverse sidecar rebuilt from the compacted adjacency — pruned
-    # lists mean pruned pairs; zero-tax reverse reads are restored
-    _write_reverse(_read(spark, path, "adjacency"), path)
-    if tomb is not None:
-        anchors = IL.anti_tombstones(
-            _read(spark, path, "anchors"), tomb, "id"
-        ).localCheckpoint(eager=True)
-        anchors.write.mode("overwrite").partitionBy("partition").parquet(
-            f"{path}/anchors"
-        )
-    if _exists(spark, f"{path}/updates"):
+    if IL.exists(spark, f"{path}/updates"):
         shutil.rmtree(f"{path}/updates", ignore_errors=True)
     if tomb is not None:
         shutil.rmtree(f"{path}/tombstones", ignore_errors=True)

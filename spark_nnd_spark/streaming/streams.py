@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from spark_nnd_spark.operators.index_lifecycle import exists
+
 
 def _await_or_raise(q: Any, timeout_sec: int) -> Any:
     """Await a streaming query's availableNow drain; on timeout STOP the
@@ -345,19 +347,12 @@ def indexed_dedup_stream(
         neardup_query_index,
     )
 
-    def _dir_exists(spark, path: str) -> bool:
-        jvm = spark.sparkContext._jvm  # noqa: SLF001
-        jsc = spark.sparkContext._jsc  # noqa: SLF001
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-        return fs.exists(hpath)
-
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         marker = f"{index_path}/admitted/ingest_batch={batch_id}"
         # _SUCCESS, not the bare directory: a crashed marker write can
         # leave a partial dir, which must NOT read as "processed"
-        if admit_novel and _dir_exists(spark, f"{marker}/_SUCCESS"):
+        if admit_novel and exists(spark, f"{marker}/_SUCCESS"):
             # fully processed on a previous attempt (verdicts written,
             # batch admitted) — replay is a no-op
             return
@@ -564,28 +559,22 @@ def graph_gate_stream(
     partitions (nnd/search.py). Admission work scales with the novel
     rows (update_graph's incremental contract).
 
-    ``use_anchors=True`` seeds each probe from its NEAREST stored
-    anchors (the coarse entry layer persisted at build) instead of
-    shared random entries — on clustered corpora random seeding needs
-    n_entry ≈ the cluster count for full duplicate detection
-    (BENCH_GS_SWEEP: recall is entry-dominated), while anchor seeding
-    reaches it at small n_entry, keeping the per-batch search cost
-    flat as the stored corpus grows."""
+    ``use_anchors=True`` seeds each probe from its NEAREST anchors (the
+    coarse entry layer: the ``n_anchors`` pinned at persist, drawn by
+    the walker from the live rows, so an admitted vector can become
+    one) instead of shared random entries — on clustered corpora
+    random seeding needs n_entry ≈ the cluster count for full duplicate
+    detection (BENCH_GS_SWEEP: recall is entry-dominated), while anchor
+    seeding reaches it at small n_entry."""
     from spark_nnd_spark.operators.knn_graph_index import (  # noqa: PLC0415
         extend_knn_graph_index,
         graph_index_search,
     )
 
-    def _dir_exists(spark, p: str) -> bool:
-        jvm = spark.sparkContext._jvm  # noqa: SLF001
-        jsc = spark.sparkContext._jsc  # noqa: SLF001
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        return hpath.getFileSystem(jsc.hadoopConfiguration()).exists(hpath)
-
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         marker = f"{index_path}/admitted/graph_batch={batch_id}"
-        if admit_novel and _dir_exists(spark, f"{marker}/_SUCCESS"):
+        if admit_novel and exists(spark, f"{marker}/_SUCCESS"):
             return  # fully processed on a previous attempt
         if batch_df.isEmpty():
             return
@@ -1895,19 +1884,12 @@ def winnow_gate_stream(
         winnow_query_index,
     )
 
-    def _dir_exists(spark, path: str) -> bool:
-        jvm = spark.sparkContext._jvm  # noqa: SLF001
-        jsc = spark.sparkContext._jsc  # noqa: SLF001
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-        return fs.exists(hpath)
-
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
         marker = f"{index_path}/admitted/winnow_batch={batch_id}"
-        if admit_novel and _dir_exists(spark, f"{marker}/_SUCCESS"):
+        if admit_novel and exists(spark, f"{marker}/_SUCCESS"):
             return  # fully processed on a previous attempt
         batch_df = batch_df.localCheckpoint(eager=True)
         hits = winnow_query_index(

@@ -331,53 +331,6 @@ def test_double_extend_content_update_latest_wins(spark, tmp_path):
     assert KG.read_graph(spark, d).count() == 201
 
 
-def _derived_reverse(spark, d):
-    """What the inline path derives: explode of the update-resolved
-    adjacency — the sidecar must equal this exactly."""
-    return {
-        (r.id, r.src)
-        for r in KG._rev_pairs(  # noqa: SLF001
-            KG._resolved_adjacency(spark, d)  # noqa: SLF001
-        ).select("id", "src").collect()
-    }
-
-
-def _sidecar_reverse(spark, d):
-    return {
-        (r.id, r.src)
-        for r in KG._resolved_reverse(spark, d).collect()  # noqa: SLF001
-    }
-
-
-def test_reverse_sidecar_equals_derived_through_lifecycle(spark, tmp_path):
-    """The reverse/ sidecar resolves to EXACTLY the pairs the inline
-    explode-derivation produces at every lifecycle state: fresh build,
-    after an O(batch) extend (update deltas pending), and after
-    compaction (sidecar physically rebuilt, logs gone)."""
-    pts = _pts(spark)
-    d = str(tmp_path / "g")
-    KG.build_knn_graph_index(pts, d, k=10, max_iterations=4, seed=42)
-    assert _sidecar_reverse(spark, d) == _derived_reverse(spark, d)
-
-    extra = spark.createDataFrame(
-        make_clustered_points(n_clusters=8, per_cluster=3, dim=8, seed=7),
-        POINT_DDL,
-    ).withColumn("id", F.col("id") + 5000)
-    KG.extend_knn_graph_index(spark, d, extra)
-    assert _sidecar_reverse(spark, d) == _derived_reverse(spark, d)
-
-    KG.retract_from_knn_graph_index(
-        spark, d, spark.createDataFrame([(0,), (1,)], "id long")
-    )
-    KG.compact_knn_graph_index(spark, d)
-    assert _sidecar_reverse(spark, d) == _derived_reverse(spark, d)
-    # compaction rebuilt the physical sidecar: no tombstoned src or
-    # target survives in the stored pairs
-    stored = spark.read.parquet(f"{d}/reverse")
-    assert stored.filter(F.col("src").isin([0, 1])).count() == 0
-    assert stored.filter(F.col("id").isin([0, 1])).count() == 0
-
-
 def test_anchor_seeded_search_beats_flat_seeding_at_small_entry(spark, tmp_path):
     """The coarse entry layer (HNSW-upper-layer move): with n_anchors
     limited and n_entry tiny, anchor-seeded search must reach at least
@@ -420,9 +373,9 @@ def test_anchor_seeded_search_beats_flat_seeding_at_small_entry(spark, tmp_path)
 
 
 def test_retracted_anchor_cannot_seed_or_surface(spark, tmp_path):
-    """A tombstoned node that happens to be an anchor must neither
-    appear in results nor survive in the anchors table after compact
-    (the anchors sidecar pays the same masking rules as every read)."""
+    """A tombstoned node that happens to be an anchor must not appear
+    in results, before or after compaction: anchors are drawn from the
+    masked rows, under the same masking rules as every read."""
     pts = _pts(spark)
     d = str(tmp_path / "g")
     KG.build_knn_graph_index(pts, d, k=10, max_iterations=3, seed=42, n_anchors=200)
@@ -442,8 +395,82 @@ def test_retracted_anchor_cannot_seed_or_surface(spark, tmp_path):
     assert after.filter(F.col("nb_id").isin(victims)).count() == 0
     assert after.count() == 2 * 3
     KG.compact_knn_graph_index(spark, d)
-    anchors = spark.read.parquet(f"{d}/anchors")
-    assert anchors.filter(F.col("id").isin(victims)).count() == 0
+    compacted = KG.graph_index_search(
+        spark, d, q, k=3, ef=32, beam=8, n_entry=4, use_anchors=True
+    )
+    assert compacted.filter(F.col("nb_id").isin(victims)).count() == 0
+    assert compacted.count() == 2 * 3
+
+
+def test_retracting_every_anchor_keeps_anchor_search_serving(spark, tmp_path):
+    """Retracting all ``n_anchors`` anchors of an index leaves an
+    anchor-seeded search with k live rows per query, before and after
+    compaction: the next-ranked live rows become the anchors."""
+    pts = spark.createDataFrame(
+        make_clustered_points(n_clusters=4, per_cluster=25, dim=8, seed=42),
+        POINT_DDL,
+    )
+    d = str(tmp_path / "g")
+    KG.build_knn_graph_index(pts, d, k=5, max_iterations=3, seed=42, n_anchors=4)
+    # the anchors: the 4 rows of smallest (xxhash64(id, seed), id)
+    anchors = [
+        int(r.id)
+        for r in pts.orderBy(F.xxhash64("id", F.lit(42)), "id").limit(4).collect()
+    ]
+    KG.retract_from_knn_graph_index(
+        spark, d, spark.createDataFrame([(i,) for i in anchors], "id long")
+    )
+    q = pts.filter(F.col("id") % 10 == 1).select(
+        F.col("id").alias("query_id"), F.col("features").alias("q_vec")
+    )
+    for compacted in (False, True):
+        if compacted:
+            KG.compact_knn_graph_index(spark, d)
+        got = KG.graph_index_search(
+            spark, d, q, k=3, ef=32, beam=8, n_entry=4, use_anchors=True
+        )
+        per_query = {
+            r.query_id: r["count"] for r in got.groupBy("query_id").count().collect()
+        }
+        assert per_query == {r.query_id: 3 for r in q.collect()}, compacted
+        assert got.filter(F.col("nb_id").isin(anchors)).count() == 0
+
+
+def test_anchor_search_of_an_index_without_n_anchors_raises(spark, tmp_path):
+    """An index whose ``meta`` predates ``n_anchors`` cannot say which
+    anchors it was persisted with: an anchor-seeded search raises, and
+    a flat-seeded one still serves."""
+    import shutil
+
+    pts = _pts(spark)
+    d = str(tmp_path / "g")
+    KG.build_knn_graph_index(pts, d, k=5, max_iterations=2, seed=42)
+    meta = spark.read.parquet(f"{d}/meta").drop("n_anchors").localCheckpoint()
+    shutil.rmtree(f"{d}/meta")
+    meta.write.parquet(f"{d}/meta")
+    q = pts.filter(F.col("id") < 2).select(
+        F.col("id").alias("query_id"), F.col("features").alias("q_vec")
+    )
+    with pytest.raises(ValueError, match="persisted without n_anchors"):
+        KG.graph_index_search(spark, d, q, k=3, use_anchors=True)
+    assert KG.graph_index_search(spark, d, q, k=3).count() == 2 * 3
+
+
+def test_index_stores_only_points_adjacency_and_meta(spark, tmp_path):
+    """After persist → extend → retract → compact the index directory
+    holds its two data tables and ``meta`` alone."""
+    rows = make_clustered_points(n_clusters=4, per_cluster=25, dim=8, seed=42)
+    d = str(tmp_path / "g")
+    KG.build_knn_graph_index(
+        spark.createDataFrame(rows[:90], POINT_DDL), d, k=5, max_iterations=2,
+        seed=42,
+    )
+    KG.extend_knn_graph_index(spark, d, spark.createDataFrame(rows[90:], POINT_DDL))
+    KG.retract_from_knn_graph_index(
+        spark, d, spark.createDataFrame([(3,), (95,)], "id long")
+    )
+    KG.compact_knn_graph_index(spark, d)
+    assert sorted(os.listdir(d)) == ["adjacency", "meta", "points"]
 
 
 def test_graph_gate_stream_anchor_seeded_equals_batch(spark, tmp_path):

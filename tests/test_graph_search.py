@@ -11,11 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_nnd_spark.nnd.descent import build_graph
-from spark_nnd_spark.nnd.search import (
-    brute_topk_l2,
-    entry_points,
-    graph_search_topk,
-)
+from spark_nnd_spark.nnd.search import brute_topk_l2, graph_search_topk
 from tests.conftest import make_clustered_points
 
 
@@ -70,17 +66,26 @@ def test_same_seed_is_deterministic(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_entry_points_cover_every_partition(spark):
+def test_every_partition_seeds(spark):
+    """With no hop, a query's results are its seeds: ``n_entry`` from
+    each of the graph's 4 partitions."""
     pts = _fixture(spark, n_partitions=4)
-    ep = entry_points(
-        pts.select("id", "features", "partition"), n_entry=3, seed=42
+    g = build_graph(pts, k=5, max_iterations=1, seed=42, validate=False)
+    queries = pts.filter(F.col("id") < 2).select(
+        F.col("id").alias("query_id"), F.col("features").alias("q_vec")
     )
-    per_part = {
-        r.partition: r.n
-        for r in ep.groupBy("partition").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(per_part) == {0, 1, 2, 3}
-    assert all(n == 3 for n in per_part.values())
+    res = graph_search_topk(
+        g, queries, k=12, ef=16, beam=4, n_entry=3, max_iterations=0, seed=42
+    )
+    per_part = (
+        res.join(pts.select(F.col("id").alias("nb_id"), "partition"), "nb_id")
+        .groupBy("query_id", "partition")
+        .count()
+        .collect()
+    )
+    assert sorted((r.query_id, r.partition, r["count"]) for r in per_part) == [
+        (q, p, 3) for q in (0, 1) for p in range(4)
+    ]
 
 
 def test_search_reaches_across_partition_walls(spark):

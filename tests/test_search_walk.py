@@ -4,9 +4,10 @@ replaced returned, in a number of Spark jobs that does not depend on
 the hop count, split over tasks without changing a row, and bad query
 vectors or an oversized partition must fail loudly.
 
-``_reference_search`` is a copy of the deleted loop (seeding, the
-per-hop ``_expand_score`` round and the ``_truncate`` pool merge), kept
-here as the oracle the walk is compared with bit for bit."""
+``_reference_search`` is a copy of the deleted loop (seeding from
+``_entry_points``, the per-hop ``_expand_score`` round and the
+``_truncate`` pool merge), kept here as the oracle the walk is compared
+with bit for bit."""
 
 from __future__ import annotations
 
@@ -16,9 +17,22 @@ from pyspark.sql import functions as F
 
 from spark_nnd_spark.nnd import search
 from spark_nnd_spark.nnd.descent import build_graph
-from spark_nnd_spark.nnd.search import _sim, entry_points, graph_search_topk
+from spark_nnd_spark.nnd.search import _sim, graph_search_topk
 from spark_nnd_spark.schemas import InvalidPointsError
 from tests.conftest import POINT_DDL, make_clustered_points
+
+
+def _entry_points(points: DataFrame, n_entry: int, seed: int) -> DataFrame:
+    """The deleted stored anchor layer: the ``n_entry`` rows of each
+    ``partition`` with the smallest ``xxhash64(id, seed)``, ties by id."""
+    w = Window.partitionBy("partition").orderBy(
+        F.xxhash64("id", F.lit(seed)), F.asc("id")
+    )
+    return (
+        points.withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= n_entry)
+        .select("id", "features", "partition")
+    )
 
 
 def _rank(pool: DataFrame) -> DataFrame:
@@ -47,7 +61,7 @@ def _reference_search(
     reverse = adj.select(F.col("id").alias("src"), F.explode("nb_ids").alias("id"))
     q = queries.select("query_id", F.col("q_vec").cast("array<double>").alias("q_vec"))
     if anchors is None:
-        anchors = entry_points(points, n_entry, seed)
+        anchors = _entry_points(points, n_entry, seed)
     scored = anchors.select("id", "features", "partition").crossJoin(
         F.broadcast(q)
     ).select("query_id", "id", "partition", _sim("q_vec", "features").alias("sim"))
@@ -127,21 +141,25 @@ def _bits(df):
         ("flat_one_hop", dict(k=5, ef=16, beam=4, n_entry=4, max_iterations=1)),
         ("entry_above_ef", dict(k=4, ef=6, beam=3, n_entry=10, seed=5)),
         ("masked", dict(k=5, ef=12, beam=3, n_entry=3, seed=11)),
-        ("anchors", dict(k=5, ef=8, beam=2, n_entry=3)),
+        ("anchors", dict(k=5, ef=8, beam=2, n_entry=3, n_anchors=15, seed=3)),
     ],
 )
 def test_walk_equals_reference_loop_bit_for_bit(spark, fixture, case, kw):
     """Same (query_id, rank, nb_id, sim bits) as the deleted loop. The
     masked cases drop every 7th row, so neighbor lists hold stale ids
-    that are no longer graph rows."""
+    that are no longer graph rows; the anchors case feeds the loop the
+    stored anchor layer the walker now draws itself."""
     g, q = fixture
     if case in ("masked", "anchors"):
         g = g.filter(F.col("id") % 7 != 3)
+    ref_kw = dict(kw)
     if case == "anchors":
-        kw["anchors"] = entry_points(g.select("id", "features", "partition"), 15, 3)
+        ref_kw["anchors"] = _entry_points(
+            g.select("id", "features", "partition"), ref_kw.pop("n_anchors"), 3
+        )
     assert g.filter(F.col("neighbors").isNull()).count() > 0  # finished rows
     got = _bits(graph_search_topk(g, q, **kw))
-    assert got == _bits(_reference_search(g, q, **kw))
+    assert got == _bits(_reference_search(g, q, **ref_kw))
     assert len(got) == kw["k"] * q.count()
 
 
@@ -250,11 +268,8 @@ def test_search_plan_is_one_cogroup_fed_by_one_partition_exchange(
     through exactly one shuffle, keyed by ``partition`` and query
     chunk."""
     g, q = fixture
-    anchors = (  # a stored anchor layer, as the persisted index reads it
-        entry_points(g.select("id", "features", "partition"), 8, 3).localCheckpoint()
-        if seeding == "anchors" else None
-    )
-    df = graph_search_topk(g, q, k=5, anchors=anchors)
+    kw = dict(n_anchors=8, seed=3) if seeding == "anchors" else {}
+    df = graph_search_topk(g, q, k=5, **kw)
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:

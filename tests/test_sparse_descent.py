@@ -38,18 +38,16 @@ def _reference_converged(graph, iteration, on_iteration, early_termination, k, n
 
 def _reference_descend_sparse(
     active, prev, hot, k, max_iterations, early_termination, sample_rate, seed,
-    threshold_n, n_blocks, on_iteration=None, reverse=None,
+    threshold_n, n_blocks, on_iteration=None,
 ):
     """The replaced loop: ``prev`` outside ``hot``'s ids, ``hot`` inside."""
     feats_all = active.select(
         F.col("id").alias("member"),
         F.col("features").cast("array<float>").alias("member_features"),
     )
-    if reverse is None:
-        reverse = prev.select(
-            F.col("id").alias("src"), F.explode("neighbors").alias("nb")
-        ).select(F.col("nb.id").alias("id"), "src")
-    reverse = reverse.select("id", "src")
+    reverse = prev.select(
+        F.col("id").alias("src"), F.explode("neighbors").alias("nb")
+    ).select(F.col("nb.id").alias("id"), "src")
 
     iterations_run = 0
     for _ in range(max_iterations):
@@ -136,7 +134,7 @@ def _reference_descend_sparse(
 
 def _reference_update_delta(
     prev, df, k, max_iterations=3, early_termination=0.01, sample_rate=1.0,
-    buckets_per_instance=4, seed=42, on_iteration=None, new_ids=None, reverse=None,
+    buckets_per_instance=4, seed=42, on_iteration=None, new_ids=None,
 ):
     """The replaced ``update_graph_delta``."""
     points = normalize_points(df)
@@ -171,7 +169,7 @@ def _reference_update_delta(
     ).localCheckpoint(eager=True)
     hot = _reference_descend_sparse(
         active, prev_nb, hot0, k, max_iterations, early_termination,
-        sample_rate, seed, n_new, n_blocks, on_iteration, reverse=reverse,
+        sample_rate, seed, n_new, n_blocks, on_iteration,
     )
     hot_clean = hot.select("id", D._out_lists().alias("neighbors"))
     prev_touched = prev_nb.join(F.broadcast(hot.select("id")), "id", "left_semi").select(
@@ -356,9 +354,10 @@ def test_each_extend_hop_adds_a_bounded_number_of_jobs(spark, tmp_path):
         shutil.copytree(base, d)
         shutil.rmtree(f"{d}/meta")
         spark.createDataFrame(
-            [(4, hops, -1.0, 1.0, 4, 9)],
+            [(4, hops, -1.0, 1.0, 4, 9, 256)],
             "k long, max_iterations long, early_termination double, "
-            "sample_rate double, buckets_per_instance long, seed long",
+            "sample_rate double, buckets_per_instance long, seed long, "
+            "n_anchors long",
         ).coalesce(1).write.parquet(f"{d}/meta")
         jobs.append(_extend_jobs(spark, d, batch, f"extend_hops_{hops}"))
     steps = [b - a for a, b in zip(jobs, jobs[1:])]
