@@ -253,6 +253,7 @@ def test_graph_independent_of_blocks_and_partitions(spark, monkeypatch):
 def test_extend_rejects_non_finite_vectors(spark, tmp_path):
     import os
 
+    from spark_nnd_spark.operators import index_lifecycle as IL
     from spark_nnd_spark.operators import knn_graph_index as KG
 
     rows = make_clustered_points(n_clusters=4, per_cluster=15, dim=8, seed=2)
@@ -278,4 +279,4 @@ def test_extend_rejects_non_finite_vectors(spark, tmp_path):
         with pytest.raises(InvalidPointsError, match=msg):
             KG.extend_knn_graph_index(spark, d, batch)
     assert spark.read.parquet(f"{d}/points").count() == 60
-    assert not KG._exists(spark, f"{d}/updates")
+    assert not IL.exists(spark, f"{d}/updates")
